@@ -28,21 +28,18 @@ object Bench {
       try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-    // DEPLOY PRE-PASS (round 14, r13 verdict item 1): every query runs
-    // ONCE, start to finish, before the first timed sample of ANY
-    // query. The deployed-artifact gates build their per-JVM temp-dir
-    // artifacts inside `computeIfAbsent` caches on first touch — that
-    // build (tens of MB of parquet written to /tmp, page cache churned)
-    // belongs to the OFFLINE phase a deployment pays once, not to the
-    // serving measurement. Riding warm-up put it microseconds before
-    // the samples: under driver-sandbox memory pressure the churn was
-    // still settling when sample 1 ran (r13: knn_ivfpq_artifact drew
-    // [35.9, 67.9, 8.2] s in the driver sweep vs a stable ~1.07 s
-    // same-code close — the round's one weak entry). The pre-pass
-    // moves every deploy, codegen compile, and first-read to a single
-    // up-front phase so the measured loop touches only warm
-    // structures; cost = one extra run per query, all of it cheap
-    // serve-side work once the builds are cached.
+    // DEPLOY PRE-PASS: every query runs ONCE, start to finish, before
+    // the first timed sample of ANY query. Deployed-artifact gates
+    // build their artifacts through graft.Deployed on first touch;
+    // that build (tens of MB of parquet written to java.io.tmpdir, page
+    // cache churned) is the OFFLINE phase a deployment pays once, not
+    // part of the serving measurement. Riding warm-up put it just
+    // before the samples, where the churn could still be settling when
+    // sample 1 ran (r13: knn_ivfpq_artifact drew [35.9, 67.9, 8.2] s vs
+    // a stable ~1.07 s). The pre-pass moves every deploy, codegen
+    // compile and first read to one up-front phase, so the measured
+    // loop touches only warm structures; cost = one extra run per
+    // query, all of it cheap serve-side work once the builds exist.
     val prepT0 = System.nanoTime()
     ordered.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
@@ -104,7 +101,7 @@ object Bench {
       .map { case (fam, rs) =>
         "\"" + fam + "\":" + f3(rs.map(_._2).filter(_ >= 0).sum)
       }.mkString("{", ",", "}")
-    val top = results.toSeq.sortBy(-_._2).take(10)
+    val top = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val nErr = results.values.count(_ < 0)
@@ -142,7 +139,7 @@ object Bench {
     // a _c${cpus} suffix.
     val artifact =
       if (benchOnly.isDefined) "bench_isolated.json"
-      else if (cpus == "32") "bench_full.json"
+      else if (cpus.trim.toIntOption.contains(32)) "bench_full.json"
       else s"bench_full_c$cpus.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact),
       s"""{"total_sec":$total,"sf":"$sfDir","cpus":$cpus,""" +

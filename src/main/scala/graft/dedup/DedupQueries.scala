@@ -496,35 +496,12 @@ object DedupQueries {
     */
   private def verifiedPairs(cand: DataFrame, sh: DataFrame,
                             minJaccard: Double = 0.5): DataFrame = {
-    // round-15 (guide §3.2, r14 verdict item 4): Bloom pre-filter the
-    // corpus-side index before the verify joins. Only docs that appear
-    // in a candidate pair can survive the equi-joins, yet both join
-    // legs (and the per-doc counts attach) previously shuffled the
-    // WHOLE capped (doc_id, shingle) index. A Bloom over candidate doc
-    // ids drops definitely-non-candidate docs before anything
-    // shuffles; false positives only add rows the equi-join discards
-    // (no false negatives ⇒ identical output), and per-doc counts are
-    // exact for every surviving doc because the filter is whole-doc.
-    // At 100 TB the candidate id set is too large to broadcast for a
-    // semi-join; the Bloom (~1.2 GB/billion ids at 1% fpp) is the
-    // scalable form. cand is persisted: the Bloom build adds two small
-    // actions (count + aggregate) over it and the verify chain reuses
-    // the cache.
-    val candP = graft.CachedFrames.persist(cand)
-    val nIds = 2L * math.max(candP.count(), 32L)
-    val bf = candP.select(col("doc_a").cast("long").as("doc_id"))
-      .union(candP.select(col("doc_b").cast("long").as("doc_id")))
-      .stat.bloomFilter("doc_id", nIds, 0.01)
-    val bfB = sh.sparkSession.sparkContext.broadcast(bf)
-    val mightMatch = udf((id: Long) => bfB.value.mightContainLong(id))
     // persisted for the same three-consumer + accurate-stats reasons
-    // as jaccardPairs (sf1 probe); the persisted frame is the BLOOMED
-    // index — all three consumers see the same filtered rows
-    val capped = graft.CachedFrames.persist(cappedShingles(sh)
-      .filter(mightMatch(col("doc_id").cast("long"))))
+    // as jaccardPairs (sf1 probe)
+    val capped = graft.CachedFrames.persist(cappedShingles(sh))
     val counts = shingleCounts(capped)
     // O(corpus) build sides carry SHUFFLE_HASH — see jaccardPairs
-    val common = candP
+    val common = cand
       .join(capped.select(col("doc_id").as("doc_a"), col("shingle"))
         .hint("shuffle_hash"), Seq("doc_a"))
       .join(capped.select(col("doc_id").as("doc_b"), col("shingle"))
@@ -2267,8 +2244,8 @@ object DedupQueries {
     */
   val TokDedupK = 15
 
-  /** One TOKENIZED corpus per (JVM, dir) — the artifact-cache
-    * discipline applied to the T29 encode feeding the token-grain
+  /** One TOKENIZED corpus per (session, dir) — the [[graft.Deployed]]
+    * token memo applied to the T29 encode feeding the token-grain
     * dedup/decontam rungs: the BPE tokenization is offline input
     * prep (priced by its own gates), and a per-invocation rebuild
     * carries FRESH checkpoint lineage through `bpeTrain`, so no

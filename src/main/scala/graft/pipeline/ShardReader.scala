@@ -148,18 +148,9 @@ object ShardReader {
       PipelineQueries.ShardChunk))
   }
 
-  private val deployments =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One deployment per (JVM, corpus) for the gate — the
-    * `insertedArtifacts` discipline from the sim family. */
+  /** The gate's deployment, built once through [[graft.Deployed]]. */
   private[graft] def deployedOf(s: SparkSession, dir: String): String =
-    deployments.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-shard-deploy").toString
-      deploy(s, dir, out)
-      out
-    })
+    graft.Deployed.artifact(s, "shard-deploy", dir)(deploy(s, dir, _))
 
   /** The rank's verified epoch shard: (position, block_id, n_tokens,
     * token_md5, token_ids), ordered by position. Throws

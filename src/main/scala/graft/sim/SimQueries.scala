@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Deployed, Tables}
 import graft.functions.VectorFunctions.{dot, normalize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -881,10 +881,10 @@ object SimQueries {
     pruned.foreach { case (_, p) => fs.delete(p, true) }
   }
 
-  /** One artifact+delete build per (JVM, corpus) for the S31 gate:
-    * deploy the S27 index once, tombstone every `vec_id % 7 == 3`
-    * (orthogonal to cluster geometry, so every list loses members),
-    * then serve from nothing but artifact + tombstones. Same codebook
+  /** The S31 gate's artifact: the S27 index with every
+    * `vec_id % 7 == 3` tombstoned (orthogonal to cluster geometry, so
+    * every list loses members), served from nothing but artifact +
+    * tombstones. Same codebook
     * and tie order as `knn_ivf_kmeans`, so the oracle is that gate's
     * SQL with the delete predicate on candidates — served-after-delete
     * ≡ the index rebuilt without the deleted vectors is exactly the
@@ -892,19 +892,13 @@ object SimQueries {
     */
   val DeleteMod = 7L
   val DeleteRem = 3L
-  private val deletedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def deletedArtifactOf(s: SparkSession, dir: String): String =
-    deletedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-deleted-ivf").toString
+    Deployed.artifact(s, "deleted-ivf", dir) { out =>
       ivfIndexWrite(s, dir, out)
       ivfDelete(s, out, vecs(s, dir)
         .filter(col("vec_id") % DeleteMod === DeleteRem)
         .select(col("vec_id")))
-      out
-    })
+    }
 
   def knnIvfDelete(s: SparkSession, dir: String): DataFrame =
     ivfServeArtifactDeleted(s, dir, deletedArtifactOf(s, dir))
@@ -1079,7 +1073,7 @@ object SimQueries {
     throw new IllegalStateException("unreachable")
   }
 
-  /** One build per (JVM, corpus) for the S32 gate: deploy the index
+  /** The S32 gate: deploy the index
     * TRAINED on the vectors with `vec_id % 3 != 1` only, then insert
     * the held-out THIRD post-deployment, then serve the standard query
     * set from the artifact. The oracle restates the subset-trained
@@ -1093,8 +1087,6 @@ object SimQueries {
     */
   val InsertMod = 3L
   val InsertRem = 1L
-  private val insertedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** S33: the RETRAIN decision — the monitoring rung that closes the
     * maintenance loop S27/S31/S32 opened (deploy → insert/delete →
@@ -1234,19 +1226,13 @@ object SimQueries {
     * hash pins that the swapped-in index IS the one the monitor
     * priced, not merely some fresher index.
     */
-  private val retrainedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def knnIvfRetrained(s: SparkSession, dir: String): DataFrame = {
-    val artifact = retrainedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-reindex").toString
+    val artifact = Deployed.artifact(s, "reindex", dir) { out =>
       val e = vecs(s, dir)
       IvfReindex.deployOn(
         e.filter(col("vec_id") % InsertMod =!= InsertRem), out)
       IvfReindex.retrain(s, out, e)
-      out
-    })
+    }
     IvfReindex.serve(s, dir, artifact)
   }
 
@@ -1321,16 +1307,13 @@ object SimQueries {
     WHERE rank <= $TopK ORDER BY q_id, rank"""
 
   def knnIvfInsert(s: SparkSession, dir: String): DataFrame = {
-    val artifact = insertedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-inserted-ivf").toString
+    val artifact = Deployed.artifact(s, "inserted-ivf", dir) { out =>
       ivfIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
       ivfInsert(s, out, vecs(s, dir)
         .filter(col("vec_id") % InsertMod === InsertRem)
         .select(col("vec_id"), col("vn")))
-      out
-    })
+    }
     ivfServeArtifact(s, dir, artifact)
   }
 
@@ -1417,11 +1400,6 @@ object SimQueries {
     SELECT q_id, neighbor, cluster, cos, rank FROM ranked
     WHERE rank <= $TopK ORDER BY q_id, rank"""
 
-  /** One artifact per (JVM, corpus) for the probe-ladder serve — the
-    * SAME ivfIndexWrite layout the S27/S31/S32 rungs deploy. */
-  private val probeArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** S8∘S27: MULTI-PROBE serving from the DEPLOYED artifact — the
     * production serving depth on the production index (the S8 rungs
     * probe in-memory assignments; the deployed path was probe-1 only):
@@ -1434,12 +1412,9 @@ object SimQueries {
     * probe-ladder serving from parquet hash-checks end to end.
     */
   def knnIvfProbeArtifact(s: SparkSession, dir: String): DataFrame = {
-    val artifact = probeArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-probe-ivf").toString
+    val artifact = Deployed.artifact(s, "probe-ivf", dir) { out =>
       ivfIndexWrite(s, dir, out)
-      out
-    })
+    }
     val cents = KMeans.collectCodebook(
       s.read.parquet(s"$artifact/centroids"))
       .map { case (c, cv) =>
@@ -2153,13 +2128,6 @@ object SimQueries {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** One artifact build per (JVM, corpus): the offline side of
-    * S21∘S27, keyed by corpus dir so bench/verify serve from a warm
-    * deployed index instead of re-deploying per sample.
-    */
-  private val filteredArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** S21∘S27 offline build: the `knn_filtered` index as a DEPLOYED
     * artifact — label-mean codebook to `centroids` (k rows of
     * (label, cvn)), tenant-tagged inverted file to `postings`
@@ -2196,12 +2164,9 @@ object SimQueries {
     * is hash-checked every round, not just spec'd.
     */
   def knnFilteredArtifact(s: SparkSession, dir: String): DataFrame = {
-    val artifact = filteredArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-filtered-ivf").toString
+    val artifact = Deployed.artifact(s, "filtered-ivf", dir) { out =>
       filteredIndexWrite(s, dir, out)
-      out
-    })
+    }
     serveFilteredArtifact(s, dir, artifact, tombstoned = false)
   }
 
@@ -2255,19 +2220,13 @@ object SimQueries {
     * with the delete predicate on candidates — served ≡ the filtered
     * index rebuilt without the deleted vectors, hash-checked.
     */
-  private val filteredDeletedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def knnFilteredDelete(s: SparkSession, dir: String): DataFrame = {
-    val artifact = filteredDeletedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-filtered-del-ivf").toString
+    val artifact = Deployed.artifact(s, "filtered-del-ivf", dir) { out =>
       filteredIndexWrite(s, dir, out)
       ivfDelete(s, out, vecs(s, dir)
         .filter(col("vec_id") % DeleteMod === DeleteRem)
         .select(col("vec_id")))
-      out
-    })
+    }
     serveFilteredArtifact(s, dir, artifact, tombstoned = true)
   }
 
@@ -3419,29 +3378,18 @@ object SimQueries {
     }
   }
 
-  private val pqArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pqDeletedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqArtifactOf(s: SparkSession, dir: String): String =
-    pqArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-artifact").toString
+    Deployed.artifact(s, "ivfpq-artifact", dir) { out =>
       ivfPqIndexWrite(s, dir, out)
-      out
-    })
+    }
 
   private def pqDeletedArtifactOf(s: SparkSession, dir: String): String =
-    pqDeletedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-deleted").toString
+    Deployed.artifact(s, "ivfpq-deleted", dir) { out =>
       ivfPqIndexWrite(s, dir, out)
       ivfDelete(s, out, vecs(s, dir)
         .filter(col("vec_id") % DeleteMod === DeleteRem)
         .select(col("vec_id")))
-      out
-    })
+    }
 
   /** S43 gate: serve from the deployed compressed artifact, no
     * deletes — the oracle is the in-memory twin's SQL verbatim, so the
@@ -3534,17 +3482,11 @@ object SimQueries {
     graft.streaming.SnapshotManifest.track(s, out, "codes")
   }
 
-  private val pqLloydArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqLloydArtifactOf(s: SparkSession,
                                        dir: String): String =
-    pqLloydArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-lloyd").toString
+    Deployed.artifact(s, "ivfpq-lloyd", dir) { out =>
       ivfPqLloydIndexWriteOn(vecs(s, dir), out)
-      out
-    })
+    }
 
   /** S52 gate: serve the standard query set from the Lloyd-trained
     * deployed artifact through the UNCHANGED raw serving closure.
@@ -3553,8 +3495,6 @@ object SimQueries {
   def knnIvfPqLloyd(s: SparkSession, dir: String): DataFrame =
     ivfPqServeArtifact(s, dir, pqLloydArtifactOf(s, dir))
 
-  private val pqLloydRefreshedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** S52b gate: TRAINER-FAITHFUL refresh — deploy the Lloyd-trained
     * index on 2/3 of the corpus (gen-0, `_books=lloyd`), refresh with
@@ -3565,15 +3505,12 @@ object SimQueries {
     * seed books (the pre-marker behavior) hash-mismatches here.
     */
   def knnIvfPqLloydRefreshed(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqLloydRefreshedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-lloyd-refresh").toString
+    val artifact = Deployed.artifact(s, "ivfpq-lloyd-refresh", dir) { out =>
       IvfPqReindex.deployOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem),
         out, trainer = "lloyd")
       IvfPqReindex.refresh(s, out, vecs(s, dir))
-      out
-    })
+    }
     IvfPqReindex.serve(s, dir, artifact)
   }
 
@@ -3926,9 +3863,6 @@ object SimQueries {
         "n_vectors", "refresh")
   }
 
-  private val pqDriftArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** S49 gate: the S46 scenario priced — books deployed from 2/3 of
     * the corpus, the full corpus as current state. The hash-pinned
     * verdict is DON'T refresh: label-seeded means are corpus-robust
@@ -3939,13 +3873,10 @@ object SimQueries {
     * distortion (the contract spec plants the firing case: books
     * trained with half the label space absent). */
   def knnIvfPqDrift(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqDriftArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-drift").toString
+    val artifact = Deployed.artifact(s, "ivfpq-drift", dir) { out =>
       ivfPqIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
-      out
-    })
+    }
     ivfPqDriftOn(s, artifact, dir)
   }
 
@@ -4102,20 +4033,14 @@ object SimQueries {
         "n_vectors", "refresh")
   }
 
-  private val pqResDriftArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** S49b gate: the residual twin of the S49 scenario — books AND
     * centroids deployed from 2/3 of the corpus, full corpus as
     * current state. */
   def knnIvfPqResDrift(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqResDriftArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpqres-drift").toString
+    val artifact = Deployed.artifact(s, "ivfpqres-drift", dir) { out =>
       ivfPqResIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
-      out
-    })
+    }
     ivfPqResDriftOn(s, artifact, dir)
   }
 
@@ -4325,9 +4250,6 @@ object SimQueries {
     }
   }
 
-  private val pqInsertedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** S44 gate: deploy the compressed index TRAINED on the vectors
     * with `vec_id % 3 != 1` only, insert the held-out third
     * post-deployment, serve the standard query set from the artifact.
@@ -4339,16 +4261,13 @@ object SimQueries {
     * retraining would NOT give).
     */
   def knnIvfPqInsert(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqInsertedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-inserted").toString
+    val artifact = Deployed.artifact(s, "ivfpq-inserted", dir) { out =>
       ivfPqIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
       ivfPqInsert(s, out, vecs(s, dir)
         .filter(col("vec_id") % InsertMod === InsertRem)
         .select(col("vec_id"), col("vn")))
-      out
-    })
+    }
     ivfPqServeArtifact(s, dir, artifact)
   }
 
@@ -4566,17 +4485,11 @@ object SimQueries {
     }
   }
 
-  private val pqResArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqResArtifactOf(s: SparkSession,
                                      dir: String): String =
-    pqResArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpqres-artifact").toString
+    Deployed.artifact(s, "ivfpqres-artifact", dir) { out =>
       ivfPqResIndexWrite(s, dir, out)
-      out
-    })
+    }
 
   def knnIvfPqResArtifact(s: SparkSession, dir: String): DataFrame =
     ivfPqResServeArtifact(s, dir, pqResArtifactOf(s, dir))
@@ -4586,8 +4499,6 @@ object SimQueries {
   // discipline)
   lazy val knnIvfPqResArtifactSql: String = knnIvfPqResidualSql
 
-  private val pqResInsertedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** S51 gate: the residual twin of [[knnIvfPqInsert]] — deploy the
     * RESIDUAL-encoded index trained on `vec_id % 3 != 1` only, insert
@@ -4603,16 +4514,13 @@ object SimQueries {
     * inserter wrote raw-scheme codes into residual books.
     */
   def knnIvfPqResInsert(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqResInsertedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpqres-inserted").toString
+    val artifact = Deployed.artifact(s, "ivfpqres-inserted", dir) { out =>
       ivfPqResIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
       ivfPqInsert(s, out, vecs(s, dir)
         .filter(col("vec_id") % InsertMod === InsertRem)
         .select(col("vec_id"), col("vn")))
-      out
-    })
+    }
     ivfPqResServeArtifact(s, dir, artifact)
   }
 
@@ -4710,8 +4618,6 @@ object SimQueries {
     SELECT q_id, neighbor, cluster, adc, rank FROM ranked
     WHERE rank <= $TopK ORDER BY q_id, rank"""
 
-  private val pqRefreshedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** S46 gate: deploy the compressed index on 2/3 of the corpus
     * (generation 0), REFRESH with the full corpus ([[IvfPqReindex]] —
@@ -4723,14 +4629,11 @@ object SimQueries {
     * swap leaves it serving, and the grace retirement).
     */
   def knnIvfPqRefreshed(s: SparkSession, dir: String): DataFrame = {
-    val artifact = pqRefreshedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-refresh").toString
+    val artifact = Deployed.artifact(s, "ivfpq-refresh", dir) { out =>
       IvfPqReindex.deployOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
       IvfPqReindex.refresh(s, out, vecs(s, dir))
-      out
-    })
+    }
     IvfPqReindex.serve(s, dir, artifact)
   }
 
@@ -6078,16 +5981,13 @@ object SimQueries {
     (rotated, winner, chain.result(), perm)
   }
 
-  // one ladder + rotation per (JVM, corpus): the twin gate and the
-  // artifact build share the (deterministic) choice — the CONTRACT
-  // under test is that serving round-trips through the PERSISTED
-  // rotation table, not that the ladder re-runs identically
-  private val opqChosenCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Int, Seq[(Int, Seq[Double], Double)], Seq[Int])]()
-
+  // the twin gate and the artifact build share the (deterministic)
+  // choice — the CONTRACT under test is that serving round-trips
+  // through the PERSISTED rotation table, not that the ladder re-runs
+  // identically
   private def opqChosenOf(s: SparkSession, dir: String)
   : (DataFrame, Int, Seq[(Int, Seq[Double], Double)], Seq[Int]) =
-    opqChosenCache.computeIfAbsent(dir, _ => opqChosen(vecs(s, dir)))
+    Deployed.memo(s, "opq-chosen", dir)(opqChosen(vecs(s, dir)))
 
   /** S50: deploy the OPQ-ROTATED compressed index — the r12 verdict's
     * item 7: S20 chooses the rotation by trained-codebook error, but
@@ -6194,16 +6094,10 @@ object SimQueries {
     }
   }
 
-  private val opqArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def opqArtifactOf(s: SparkSession, dir: String): String =
-    opqArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-opq-artifact").toString
+    Deployed.artifact(s, "opq-artifact", dir) { out =>
       opqIndexWrite(s, dir, out)
-      out
-    })
+    }
 
   /** S50 twin: the in-memory OPQ-rotated IVFPQ — ladder → winner →
     * rotate → the S16 pipeline over the rotated space. The artifact
@@ -6299,8 +6193,6 @@ object SimQueries {
 
   lazy val knnOpqArtifactSql: String = knnOpqSql
 
-  private val opqInsertedArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** S51 gate (opq grain): deploy the OPQ artifact with ladder,
     * rotation, centroids, and books all derived from the TRAINING
@@ -6319,16 +6211,13 @@ object SimQueries {
     * UNROTATED codes into the rotated space.
     */
   def knnOpqInsert(s: SparkSession, dir: String): DataFrame = {
-    val artifact = opqInsertedArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-opq-inserted").toString
+    val artifact = Deployed.artifact(s, "opq-inserted", dir) { out =>
       opqIndexWriteOn(
         vecs(s, dir).filter(col("vec_id") % InsertMod =!= InsertRem), out)
       ivfPqInsert(s, out, vecs(s, dir)
         .filter(col("vec_id") % InsertMod === InsertRem)
         .select(col("vec_id"), col("v")))
-      out
-    })
+    }
     opqQueryServer(s, artifact, excludeSelf = true)(
       vecs(s, dir).filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v")))
@@ -7116,29 +7005,13 @@ object SimQueries {
     }
   }
 
-  /** One artifact build per (JVM, corpus) for the S35/S36 gates —
-    * the deployment story IS the gate: build once, serve from parquet.
-    */
-  private val graphArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val hnswArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def knnGraphArtifact(s: SparkSession, dir: String): DataFrame =
-    graphServeArtifact(s, dir, graphArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-graph-index").toString
-      graphIndexWrite(s, dir, out)
-      out
-    }))
+    graphServeArtifact(s, dir,
+      Deployed.artifact(s, "graph-index", dir)(graphIndexWrite(s, dir, _)))
 
   def knnGraphHnswArtifact(s: SparkSession, dir: String): DataFrame =
-    hnswServeArtifact(s, dir, hnswArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-hnsw-index").toString
-      hnswIndexWrite(s, dir, out)
-      out
-    }))
+    hnswServeArtifact(s, dir,
+      Deployed.artifact(s, "hnsw-index", dir)(hnswIndexWrite(s, dir, _)))
 
   /** S36b (R15b's core): insert a batch of (vec_id BIGINT,
     * v ARRAY&lt;DOUBLE&gt;) into the PERSISTED layered-graph artifact —
@@ -7380,28 +7253,22 @@ object SimQueries {
     }
   }
 
-  /** One churned deployment per (JVM, corpus) for the S38 gate: the
-    * S32/S33 scenario on the graph family — deploy the HNSW artifact
-    * built on 2/3 of the corpus, stream-insert the held-out third
-    * (append-only connects, no re-prune), then ask the monitor. The
-    * insert-grown graph provably has refinable edges, so the gate's
-    * recommend flag has signal.
+  /** The S38 gate's churned deployment: the S32/S33 scenario on the
+    * graph family — deploy the HNSW artifact built on 2/3 of the
+    * corpus, stream-insert the held-out third (append-only connects,
+    * no re-prune), then ask the monitor. The insert-grown graph
+    * provably has refinable edges, so the gate's recommend flag has
+    * signal.
     */
-  private val driftArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def knnGraphDrift(s: SparkSession, dir: String): DataFrame = {
-    val artifact = driftArtifacts.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-graph-drift").toString
+    val artifact = Deployed.artifact(s, "graph-drift", dir) { out =>
       val e = vecs(s, dir)
       hnswIndexWriteOn(e.filter(col("vec_id") % InsertMod =!= InsertRem),
         out)
       hnswArtifactInsert(s, out,
         e.filter(col("vec_id") % InsertMod === InsertRem)
           .select(col("vec_id"), col("v")), batchId = 1L)
-      out
-    })
+    }
     graphDriftOn(s, artifact)
   }
 

@@ -1433,15 +1433,10 @@ object TextQueries {
     nb.result()
   }
 
-  /** One deep training per (JVM, corpus): the gates below share the
-    * trajectory, and bench samples serve from the warm table.
-    */
-  private val deepBpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Vector[(Int, String, String, Long)], Map[String, Int])]()
-
+  /** The deep training, shared by the gates below. */
   private def deepBpe(s: SparkSession, dir: String)
       : (Vector[(Int, String, String, Long)], Map[String, Int]) =
-    deepBpeCache.computeIfAbsent(dir, _ => {
+    graft.Deployed.memo(s, "bpe-deep", dir) {
       val vocab = Tables.documents(s, dir)
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
@@ -1449,7 +1444,7 @@ object TextQueries {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         .sortBy(_._1)
       bpeTrainDeep(vocab, BpeDeepRounds)
-    })
+    }
 
   /** T16d: the deep trainer's merge-table PREFIX — the first
     * `BpeRounds` rows of the `BpeDeepRounds`-deep trajectory. BPE
@@ -1753,45 +1748,30 @@ object TextQueries {
       .withColumn("n_tokens", size(col("token_ids")).cast("long"))
   }
 
-  /** The DEPLOYED tokenizer's encoded corpus — (doc_id, token_ids,
-    * n_tokens), memoized per (JVM, data dir). Round-14 optimization
-    * (guide §1.2/§2.4 — don't recompute what a deployment computes
-    * once): every downstream loader-pipeline operator (P32/P33/P35/
-    * P36 pack/order/manifest, D35/P41 token-grain substring dedup)
-    * consumes the SAME frozen-tokenizer encode as offline input prep
-    * — priced by its own gates (text_bpe = train, text_bpe_tokens /
-    * text_bpe_encode = encode, which deliberately do NOT use this
-    * memo) — yet each invocation re-ran `bpeTrain`'s 8 collect+
-    * checkpoint rounds and the corpus encode with FRESH checkpoint
-    * lineage, so no downstream cache could ever match across runs
-    * (the r13 D35 warm>cold pathology, generalized). The
-    * localCheckpoint pins one lineage per (JVM, dir): downstream
-    * plans become identical across invocations, so their
-    * CachedFrames entries finally dedupe, and the tokenizer trains
-    * once per JVM per corpus — the artifact-cache discipline the
-    * deployed ANN indexes (pqArtifactOf) already follow.
-    */
-  private val deployedSeqFrames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val TokenSequencesKind = "token-sequences"
 
-  /** round-15 (r14 ADVICE): the memo holds live RDD state, so a cached
-    * frame is only servable while ITS SparkSession is the caller's live
-    * one — a stopped/recreated session would otherwise be handed dead
-    * checkpoint blocks. compute() re-validates per lookup and rebuilds
-    * on a session change; [[releaseDeployedTokenSequences]] is the
-    * explicit invalidation hook (test teardown, corpus swap).
+  /** The DEPLOYED tokenizer's encoded corpus — (doc_id, token_ids,
+    * n_tokens), memoized in [[graft.Deployed]]. Every downstream
+    * loader-pipeline operator (P32/P33/P35/P36 pack/order/manifest,
+    * D35/P41 token-grain substring dedup) consumes the SAME
+    * frozen-tokenizer encode as offline input prep — priced by its own
+    * gates (text_bpe = train, text_bpe_tokens / text_bpe_encode =
+    * encode, which deliberately do NOT use this memo). The
+    * localCheckpoint pins one lineage per (session, dir): downstream
+    * plans are identical across invocations, so their CachedFrames
+    * entries dedupe, and the tokenizer trains once per corpus.
     */
   private[graft] def deployedTokenSequences(s: SparkSession,
                                             dir: String): DataFrame =
-    deployedSeqFrames.compute(dir, (_, cached) =>
-      if (cached != null && (cached.sparkSession eq s) &&
-          !s.sparkContext.isStopped) cached
-      else bpeTokenSequences(s, dir)
+    graft.Deployed.memo(s, TokenSequencesKind, dir) {
+      bpeTokenSequences(s, dir)
         .select(col("doc_id"), col("token_ids"), col("n_tokens"))
-        .localCheckpoint(false))
+        .localCheckpoint(false)
+    }
 
+  /** Drop the token memo (test teardown, corpus swap). */
   private[graft] def releaseDeployedTokenSequences(): Unit =
-    deployedSeqFrames.clear()
+    graft.Deployed.release(TokenSequencesKind)
 
   /** T30: BPE DECODE — the tokenizer ROUND-TRIP, closing the loader
     * loop T29 opened (a training pipeline that can only encode is
