@@ -49,17 +49,10 @@ object PlanDump {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are delivered asynchronously: poll until the
-      // counters are stable so trailing stage-completed events are
-      // counted (r14 ADVICE — the public API has no bus-drain hook)
-      var snap = (jobs.get, stages.get, tasks.get)
-      var settled = false
-      while (!settled) {
-        Thread.sleep(200)
-        val now = (jobs.get, stages.get, tasks.get)
-        settled = now == snap
-        snap = now
-      }
+      // listener events are delivered asynchronously: drain the bus so
+      // trailing stage-completed events are counted (bounded: throws
+      // after 10 s instead of waiting forever)
+      org.apache.spark.graft.SparkInternals.drainListenerBus(spark.sparkContext)
       // counts include the query-BUILD phase's jobs (training collects,
       // checkpointed rounds) — that is the point: loop-shape changes
       // move these numbers even when the final frame's plan is stable.

@@ -44,4 +44,25 @@ object VectorFunctions {
     val n = math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
     v.map(_ / n)
   }
+
+  /** Driver-side twin of [[dot]]: the same left-to-right Σ aᵢ·bᵢ over
+    * the first `a.length` elements (callers pass equal lengths; the
+    * expression returns NULL where they differ).
+    */
+  def dotSeq(a: Seq[Double], b: Seq[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Driver-side twin of Spark's `round(x, scale)` on a double: HALF_UP
+    * on `BigDecimal.valueOf(x)` (the shortest decimal string of `x`,
+    * not its exact binary value), NaN and ±Inf passed through. Like
+    * Spark it returns +0.0 for -0.0 and for a negative that rounds to
+    * zero, since a BigDecimal has no negative zero.
+    */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 }

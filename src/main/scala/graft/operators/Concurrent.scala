@@ -18,11 +18,22 @@ package graft.operators
   * unchanged.
   */
 object Concurrent {
+  private val calls = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Each task runs under its own Spark job group (interrupt on
+    * cancel). On the first failure, in completion order, the other
+    * tasks' driver threads are interrupted AND their job groups
+    * cancelled — running and future jobs alike — so their Spark work
+    * stops too; the failure is rethrown unwrapped. A task's job group
+    * replaces the caller's for the jobs that task starts.
+    */
   def par[A](tasks: Seq[() => A], parallelism: Int = 4): Seq[A] = {
     if (tasks.lengthCompare(1) <= 0) return tasks.map(_())
+    val sc = org.apache.spark.graft.SparkInternals.activeContext
+    val call = s"graft-par-${calls.getAndIncrement()}"
+    val groups = tasks.indices.map(i => s"$call-$i")
     // daemon threads: a hung task cannot pin the JVM past main's exit
-    // (r14 ADVICE); Spark actions on these threads respond to interrupt
-    // via job cancellation, so cancel-on-failure below is effective
+    // (r14 ADVICE)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, tasks.size),
       new java.util.concurrent.ThreadFactory {
@@ -34,23 +45,27 @@ object Concurrent {
         }
       })
     try {
-      val futs = tasks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = t()
+      val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
+      val futs = tasks.zip(groups).map { case (t, g) =>
+        done.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = {
+            sc.foreach(_.setJobGroup(g, g, interruptOnCancel = true))
+            try t() finally sc.foreach(_.clearJobGroup())
+          }
         })
       }
-      // unwrap so callers see the task's own exception, not the
-      // ExecutionException shell; on the FIRST failure cancel the
-      // rest of the batch (r14 ADVICE: don't keep burning the pool on
-      // jobs whose result the caller will never read)
-      futs.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            futs.foreach(_.cancel(true))
-            throw e.getCause
-        }
+      try tasks.foreach(_ => done.take().get())
+      catch {
+        case e: Throwable =>
+          futs.foreach(_.cancel(true))
+          sc.foreach(c => groups.foreach(g => c.cancelJobGroupAndFutureJobs(g)))
+          throw (e match {
+            case x: java.util.concurrent.ExecutionException => x.getCause
+            case other => other
+          })
       }
+      // results IN INPUT ORDER
+      futs.map(_.get())
     } finally pool.shutdown()
   }
 }

@@ -98,22 +98,38 @@ object ConnectedComponents {
     // action are applied exactly once per task; integer sums wrap the
     // same way the SQL sum did. Values are identical: count/Σu/Σv over
     // the same round frame.
+    //
+    // The accumulator path reads the two columns by position as
+    // physical ints or longs, so any other column type takes the SQL
+    // aggregate (which coerces). A null skips the sum it belongs to and
+    // still counts its row — SQL count(1)/sum semantics — so nullable
+    // columns, which every parquet- or join-derived edge frame has,
+    // keep the one-job probe.
     def sig(df: DataFrame): (Long, Long, Long) = {
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val types = Seq(df.schema(0).dataType, df.schema(1).dataType)
+      if (!types.forall(t => t == IntegerType || t == LongType)) {
+        val r = df.agg(count(lit(1)), sum(col("u")).cast("long"),
+          sum(col("v")).cast("long")).head()
+        return (r.getLong(0),
+          if (r.isNullAt(1)) 0L else r.getLong(1),
+          if (r.isNullAt(2)) 0L else r.getLong(2))
+      }
       val sc = df.sparkSession.sparkContext
       val cnt = sc.longAccumulator
       val su = sc.longAccumulator
       val sv = sc.longAccumulator
-      val uLong =
-        df.schema(0).dataType == org.apache.spark.sql.types.LongType
-      val vLong =
-        df.schema(1).dataType == org.apache.spark.sql.types.LongType
+      val Seq(uLong, vLong) = types.map(_ == LongType)
       df.queryExecution.toRdd.foreachPartition { it =>
+        def at(r: org.apache.spark.sql.catalyst.InternalRow, i: Int,
+               long: Boolean): Long =
+          if (r.isNullAt(i)) 0L else if (long) r.getLong(i) else r.getInt(i)
         var c = 0L; var a = 0L; var b = 0L
         while (it.hasNext) {
           val r = it.next()
           c += 1
-          a += (if (uLong) r.getLong(0) else r.getInt(0).toLong)
-          b += (if (vLong) r.getLong(1) else r.getInt(1).toLong)
+          a += at(r, 0, uLong)
+          b += at(r, 1, vLong)
         }
         cnt.add(c); su.add(a); sv.add(b)
       }

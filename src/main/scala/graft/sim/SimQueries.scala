@@ -1,10 +1,13 @@
 package graft.sim
 
 import graft.{Deployed, Tables}
-import graft.functions.VectorFunctions.{dot, normalize}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.VectorFunctions.{dot, dotSeq, normalize, normalizeSeq,
+  roundHalfUp}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
+  LongType, StructField, StructType}
 
 /** Similarity search over the `embeddings` table (SURVEY §2.4).
   *
@@ -569,9 +572,12 @@ object SimQueries {
   private def tombstonesOf(s: SparkSession, artifact: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$artifact/tombstones")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // no tombstones: an empty local frame, which the optimizer folds
+    // out of the anti-join (a ranged empty frame cost a broadcast job)
     if (fs.exists(p))
       s.read.schema(tombstoneSchema).parquet(p.toString).distinct()
-    else s.range(0).select(col("id").as("vec_id"))
+    else s.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL(tombstoneSchema))
   }
 
   /** The tombstone-honoring artifact serving core for ARBITRARY query
@@ -2602,12 +2608,6 @@ object SimQueries {
     * The DuckDB oracle restates codebook build + per-subspace argmin +
     * error, so the gate hash-checks the quantizer end to end.
     */
-  private def dotSeq(a: Seq[Double], b: Seq[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
-
   /** shared PQ core: subvector frame (vec_id, label, s0, s1) and the
     * two label-seeded subspace codebooks, plus the literal argmin
     * assignment expression. `vecCol` picks the space: raw "v" for
@@ -2754,16 +2754,8 @@ object SimQueries {
   private def pqLut(sub: DataFrame, sCol: String,
       cb: Seq[(Long, Seq[Double])], codeName: String,
       dName: String): DataFrame =
-    pqLutOn(sub.filter(col("vec_id") < NumQueries), sCol, cb,
-      codeName, dName)
-
-  /** The LUT over an ARBITRARY query-subvector frame (vec_id, sCol) —
-    * no gate query-set filter; the seam the streamed ADC face (R37)
-    * builds its per-trigger LUTs through. */
-  private def pqLutOn(sub: DataFrame, sCol: String,
-      cb: Seq[(Long, Seq[Double])], codeName: String,
-      dName: String): DataFrame =
-    sub.select(col("vec_id").as("q_id"), explode(array(cb.map {
+    sub.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), explode(array(cb.map {
         case (code, cv) => struct(
           lit(code).as(codeName),
           round(dot(col(sCol), col(sCol)) -
@@ -2772,26 +2764,6 @@ object SimQueries {
       }: _*)).as("x"))
       .select(col("q_id"), col(s"x.$codeName").as(codeName),
         col(s"x.$dName").as(dName))
-
-  /** The per-(query, probed-list) LUT over a (vec_id, cluster, sCol)
-    * residual-subvector frame — the S7b multi-probe shape (residual
-    * LUTs are per-list), keyed (q_id, cluster, code) for the keyed
-    * ADC joins in [[ivfPqServeCore]]. |Q|·p·k rows — kilobytes,
-    * broadcast like every LUT.
-    */
-  private def pqLutKeyedOn(sub: DataFrame, sCol: String,
-      cb: Seq[(Long, Seq[Double])], codeName: String,
-      dName: String): DataFrame =
-    sub.select(col("vec_id").as("q_id"), col("cluster"),
-        explode(array(cb.map {
-        case (code, cv) => struct(
-          lit(code).as(codeName),
-          round(dot(col(sCol), col(sCol)) -
-            lit(2.0) * dot(col(sCol), typedLit(cv)) +
-            lit(dotSeq(cv, cv)), 6).as(dName))
-      }: _*)).as("x"))
-      .select(col("q_id"), col("cluster"),
-        col(s"x.$codeName").as(codeName), col(s"x.$dName").as(dName))
 
   def knnPqAdc(s: SparkSession, dir: String): DataFrame = {
     val (sub, cb0, cb1) = pqCore(s, dir, vecCol = "vn")
@@ -3273,47 +3245,121 @@ object SimQueries {
       .orderBy(col("q_id"), col("rank"))
 
   /** The compressed serving face for ARBITRARY (q_id, v) query
-    * frames — codebooks collect ONCE when the closure is built (the
-    * `queryAssigner` discipline), so the streamed face (R37) pays
-    * per-trigger only the narrow LUT projection + the pruned ADC
-    * join. The batch gate serves through this same closure, so the
-    * two faces cannot drift.
+    * frames. Codebooks and centroids collect ONCE when the closure is
+    * built (the `queryAssigner` discipline); each applied batch then
+    * pays its query side once, on the driver ([[prepareQueries]]):
+    * the batch is collected — |Q| rows, the same bound the probed-set
+    * collect already relied on, so a caller must pass a query batch,
+    * never a corpus — normalized, probed and turned into both ADC
+    * LUTs by the driver twins of the column expressions, and handed
+    * to [[ivfPqServeCore]] as small local frames with the probed
+    * labels. The per-batch Spark work is the pruned codes scan, the
+    * broadcast joins and the rank; no query expression is evaluated
+    * per join side. The batch gates, the OPQ server and the streamed
+    * face (R37) all serve through this closure, so they cannot drift.
     *
     * `nprobe` is the DEPLOYED recall knob (round 13, r12 verdict
     * item 1 — the in-memory S6b rung had it, the serving closure a
     * 100 TB deployment actually turns did not): raw-encoded ADC LUTs
     * are cluster-independent, so probing wider only multiplies the
-    * (q_id, cluster) probe rows — the same slice+explode
-    * `topProbesCol` selection as every multi-probe rung — while the
-    * serving tail is UNCHANGED: the codes scan partition-prunes to
-    * the union of probed lists (|Q|·nprobe labels, still a bounded
-    * driver set), LUTs still broadcast q_id-keyed. PlanSpec pins the
-    * pruned shape at nprobe > 1.
+    * (q_id, cluster) probe rows — the same top-`nprobe` order as the
+    * `topProbesCol` rungs — while the serving tail is UNCHANGED: the
+    * codes scan partition-prunes to the union of probed lists
+    * (|Q|·nprobe labels), LUTs still broadcast q_id-keyed. PlanSpec
+    * pins the pruned shape at nprobe > 1.
     */
   private[graft] def ivfPqQueryServer(s: SparkSession, artifact: String,
       excludeSelf: Boolean = false,
-      nprobe: Int = 1): DataFrame => DataFrame = {
+      nprobe: Int = 1): DataFrame => DataFrame =
+    adcQueryServer(s, artifact, excludeSelf, nprobe, residual = false)
+
+  /** The S43/S45 serving closure. Raw LUTs are one per query, keyed
+    * q_id; residual LUTs are one per (query, probed list) — the
+    * query's residual against THAT list's centroid — keyed
+    * (q_id, cluster).
+    */
+  private def adcQueryServer(s: SparkSession, artifact: String,
+      excludeSelf: Boolean, nprobe: Int,
+      residual: Boolean): DataFrame => DataFrame = {
     val cents = collectPqCents(s, artifact)
+    val centOf = cents.toMap
     val (cb0, cb1) = collectPqBooks(s, artifact)
     val Half = 32
     (raw: DataFrame) => {
-      val qsub = raw
-        .withColumn("vn", normalize(col("v")))
-        .select(col("q_id").as("vec_id"), col("vn"),
-          slice(col("vn"), 1, Half).as("s0"),
-          slice(col("vn"), Half + 1, Half).as("s1"))
-      val q =
-        if (nprobe <= 1)
-          qsub.select(col("vec_id").as("q_id"),
-            bestClusterCol(cents).as("cluster"))
-        else
-          qsub.select(col("vec_id").as("q_id"),
-            explode(topProbesCol(cents, nprobe)).as("p"))
-            .select(col("q_id"), col("p.label").as("cluster"))
-      val lut0 = pqLutOn(qsub, "s0", cb0, "code0", "d0")
-      val lut1 = pqLutOn(qsub, "s1", cb1, "code1", "d1")
-      ivfPqServeCore(s, artifact, q, lut0, lut1, excludeSelf)
+      val (qIdType, qs) = prepareQueries(raw, cents, nprobe)
+      val q = localFrame(s, Seq("q_id" -> qIdType, "cluster" -> IntegerType),
+        for (pq <- qs; c <- pq.probes) yield Row(pq.qId, c))
+      val keys = ("q_id" -> qIdType) +:
+        (if (residual) Seq("cluster" -> IntegerType) else Nil)
+      val subjects: Seq[(Seq[Any], Seq[Double])] =
+        if (residual)
+          for (pq <- qs; c <- pq.probes)
+            yield (Seq(pq.qId, c),
+              pq.vn.zip(centOf(c)).map { case (a, b) => a - b })
+        else qs.map(pq => (Seq(pq.qId), pq.vn))
+      def lut(from: Int, cb: Seq[(Long, Seq[Double])], codeName: String,
+              dName: String): DataFrame =
+        localFrame(s, keys :+ (codeName -> LongType) :+ (dName -> DoubleType),
+          for ((key, v) <- subjects;
+               (code, d) <- lutRow(v.slice(from, from + Half), cb))
+            yield Row.fromSeq(key :+ code :+ d))
+      ivfPqServeCore(s, artifact, q, lut(0, cb0, "code0", "d0"),
+        lut(Half, cb1, "code1", "d1"),
+        qs.flatMap(_.probes).distinct.sorted, excludeSelf, keys.map(_._1))
     }
+  }
+
+  /** One query of a served batch: its id (of the batch's `q_id`
+    * type), unit vector and probed labels, best first. */
+  private final case class PreparedQuery(qId: Any, vn: Seq[Double],
+                                         probes: Seq[Int])
+
+  /** The query side of one served batch, on the driver: `raw` is
+    * collected once (no Spark job for a local batch) and each vector
+    * is normalized and scored against the centroids with the driver
+    * twins `normalizeSeq`/`dotSeq`/`roundHalfUp` of `normalize`, `dot`
+    * and `round(_, 6)`, so the probes are the ones `bestClusterCol` /
+    * `topProbesCol` pick: round(dot, 6) DESC under Spark's double
+    * order (NaN highest, -0.0 = 0.0), label ASC, first max(nprobe, 1).
+    * A null vector or element, or a vector whose length is not the
+    * centroids', is refused: the expressions would score it NULL.
+    */
+  private def prepareQueries(raw: DataFrame, cents: Seq[(Int, Seq[Double])],
+      nprobe: Int): (DataType, Seq[PreparedQuery]) = {
+    val dim = cents.head._2.length
+    def sqlCompare(x: Double, y: Double): Int =
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    val prepared = raw.select(col("q_id"), col("v")).collect().toSeq.map { r =>
+      val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+      require(v != null && v.length == dim && !v.contains(null),
+        s"query ${r.get(0)}: expected $dim non-null doubles, got $v")
+      val vn = normalizeSeq(v.map(_.asInstanceOf[Double]).toVector)
+      val probes = cents
+        .map { case (lbl, cvn) => (roundHalfUp(dotSeq(vn, cvn), 6), lbl) }
+        .sortWith { case ((a, la), (b, lb)) =>
+          val c = sqlCompare(a, b)
+          if (c != 0) c > 0 else la < lb }
+        .take(math.max(nprobe, 1)).map(_._2)
+      PreparedQuery(r.get(0), vn, probes)
+    }
+    (raw.schema("q_id").dataType, prepared)
+  }
+
+  /** (code, round(‖s‖² − 2·s·cv + ‖cv‖², 6)) per codeword: the driver
+    * twin of the LUT expression in [[pqLut]], same operation order. */
+  private def lutRow(sv: Seq[Double], cb: Seq[(Long, Seq[Double])])
+  : Seq[(Long, Double)] = {
+    val ss = dotSeq(sv, sv)
+    cb.map { case (code, cv) =>
+      (code, roundHalfUp(ss - 2.0 * dotSeq(sv, cv) + dotSeq(cv, cv), 6))
+    }
+  }
+
+  private def localFrame(s: SparkSession,
+      fields: Seq[(String, DataType)], rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava,
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
   }
 
   private def collectPqCents(s: SparkSession, artifact: String)
@@ -3323,11 +3369,12 @@ object SimQueries {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toVector: Seq[Double]))
       .sortBy(_._1)
 
-  /** The shared deployed-ADC serving tail: |Q|-bounded probed set →
-    * the codes scan partition-prunes to exactly the probed lists (the
-    * S37 discipline), tombstones anti-join on candidates only,
-    * broadcast LUT joins, rank, top-k. Raw (S43) and residual (S45)
-    * encodings differ only in how `q`/LUTs are prepared.
+  /** The shared deployed-ADC serving tail over a prepared batch: the
+    * codes scan partition-prunes to exactly the caller's `probed`
+    * labels (the S37 discipline; |Q|·nprobe of them), tombstones
+    * anti-join on candidates only, broadcast LUT joins, rank, top-k.
+    * Raw (S43) and residual (S45) encodings differ only in the LUT
+    * keys.
     *
     * Every join side that is SMALL BY CONTRACT is broadcast-hinted
     * explicitly rather than left to the threshold: the query batch
@@ -3340,12 +3387,10 @@ object SimQueries {
     */
   private def ivfPqServeCore(s: SparkSession, artifact: String,
                              q: DataFrame, lut0: DataFrame,
-                             lut1: DataFrame,
-                             excludeSelf: Boolean = true,
-                             lutKeys: Seq[String] = Seq("q_id"))
+                             lut1: DataFrame, probed: Seq[Int],
+                             excludeSelf: Boolean,
+                             lutKeys: Seq[String])
   : DataFrame = {
-    val probed = q.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSeq
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("adc"), col("neighbor"))
     val joined = codesView(s, artifact)
@@ -4420,11 +4465,10 @@ object SimQueries {
       vecs(s, dir).filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v")))
 
-  /** The residual-encoding twin of [[ivfPqQueryServer]]: the query's
-    * residual against its own probed list's centroid feeds the LUTs
-    * (one broadcast-joined subtraction — a narrow map), then the same
-    * pruned ADC tail. Codebooks and the centroid frame collect once
-    * at closure build.
+  /** The residual-encoding twin of [[ivfPqQueryServer]]: the same
+    * closure and per-batch driver prep, except that the LUTs are built
+    * from the query's residual against each probed list's centroid
+    * (one elementwise subtraction on the driver, no centroid join).
     *
     * `nprobe` (round 13): residual encoding is the one serving path
     * where the recall knob costs more than a wider equi-join —
@@ -4440,50 +4484,8 @@ object SimQueries {
   private[graft] def ivfPqResQueryServer(s: SparkSession,
       artifact: String,
       excludeSelf: Boolean = false,
-      nprobe: Int = 1): DataFrame => DataFrame = {
-    import s.implicits._
-    val cents = collectPqCents(s, artifact)
-    val centDf = cents.toDF("cluster", "cvec")
-    val (cb0, cb1) = collectPqBooks(s, artifact)
-    (raw: DataFrame) => {
-      if (nprobe <= 1) {
-        val qsub = raw
-          .withColumn("vn", normalize(col("v")))
-          .select(col("q_id").as("vec_id"), col("vn"),
-            bestClusterCol(cents).as("cluster"))
-          .join(broadcast(centDf), Seq("cluster"))
-          .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-          .select(col("vec_id"), col("cluster"),
-            slice(col("r"), 1, 32).as("s0"),
-            slice(col("r"), 33, 32).as("s1"))
-        val q = qsub.select(col("vec_id").as("q_id"), col("cluster"))
-        val lut0 = pqLutOn(qsub, "s0", cb0, "code0", "d0")
-        val lut1 = pqLutOn(qsub, "s1", cb1, "code1", "d1")
-        ivfPqServeCore(s, artifact, q, lut0, lut1, excludeSelf)
-      } else {
-        // top-p lists per query, each with the residual vs THAT
-        // list's centroid (one broadcast-joined subtraction), then
-        // per-(query, list) LUTs — the S7b machinery against the
-        // DEPLOYED books
-        val qp = raw
-          .withColumn("vn", normalize(col("v")))
-          .select(col("q_id").as("vec_id"), col("vn"),
-            explode(topProbesCol(cents, nprobe)).as("p"))
-          .select(col("vec_id"), col("p.label").as("cluster"),
-            col("vn"))
-          .join(broadcast(centDf), Seq("cluster"))
-          .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-          .select(col("vec_id"), col("cluster"),
-            slice(col("r"), 1, 32).as("s0"),
-            slice(col("r"), 33, 32).as("s1"))
-        val q = qp.select(col("vec_id").as("q_id"), col("cluster"))
-        val lut0 = pqLutKeyedOn(qp, "s0", cb0, "code0", "d0")
-        val lut1 = pqLutKeyedOn(qp, "s1", cb1, "code1", "d1")
-        ivfPqServeCore(s, artifact, q, lut0, lut1, excludeSelf,
-          lutKeys = Seq("q_id", "cluster"))
-      }
-    }
-  }
+      nprobe: Int = 1): DataFrame => DataFrame =
+    adcQueryServer(s, artifact, excludeSelf, nprobe, residual = true)
 
   private[graft] def pqResArtifactOf(s: SparkSession,
                                      dir: String): String =

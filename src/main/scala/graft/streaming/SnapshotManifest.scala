@@ -600,17 +600,19 @@ object SnapshotManifest {
       case _ => ()
     }
 
-  /** `resolve` as a DataFrame with partition columns inferred under
-    * `basePath`; an empty view reads as an explicit-schema empty frame
-    * (zero paths would throw on schema inference).
+  /** `resolve` as a DataFrame under `basePath`, read with the table's
+    * `ddl` (data columns, then partition columns) — no parquet footer
+    * is read to infer a schema, so a read starts no schema-inference
+    * job; an empty view reads as an empty frame of the same schema.
     */
   def resolveDf(s: SparkSession, artifact: String, table: String,
                 ddl: String): DataFrame = {
     val files = resolve(s, artifact, table)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
     if (files.isEmpty)
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    else s.read.option("basePath", s"$artifact/$table")
+        schema)
+    else s.read.schema(schema).option("basePath", s"$artifact/$table")
       .parquet(files: _*)
   }
 

@@ -93,15 +93,17 @@ object StreamAnnServe {
     * cannot drift (parity-spec'd).
     */
   /** R37: streamed queries against the deployed COMPRESSED artifact
-    * (S43/S45) — the ADC serving verb on the standing topology: each
-    * trigger's (q_id, v) batch builds its broadcast LUTs in one
-    * narrow projection under codebooks collected ONCE at start-up,
-    * candidates come from the manifest-resolved partition-pruned
-    * codes scan (zero data-dir LISTs on a held artifact — the E33
-    * contract the compressed family is born with), live tombstones
-    * mask candidates per trigger. The per-trigger body IS the S43/S45
-    * batch closure (`ivfPqQueryServer` / `ivfPqResQueryServer`), so
-    * the streamed and batch answers cannot drift (parity-spec'd
+    * (S43/S45) — the ADC serving verb on the standing topology.
+    * Codebooks and centroids collect ONCE at start-up; each trigger
+    * collects its (q_id, v) batch once (one job — a trigger's queries,
+    * never a corpus) and prepares the probes and both LUTs on the
+    * driver, then runs the manifest-resolved, schema-given,
+    * partition-pruned codes scan (zero data-dir LISTs and no schema
+    * inference on a held artifact — the E33 contract the compressed
+    * family is born with) with the LUTs broadcast and live tombstones
+    * masking candidates. The per-trigger body IS the S43/S45 batch
+    * closure (`ivfPqQueryServer` / `ivfPqResQueryServer`), so the
+    * streamed and batch answers cannot drift (parity-spec'd
     * bit-for-bit under 1-file-per-trigger packing). Stateless per
     * trigger; the artifact is the state and lives outside the stream.
     *

@@ -65,6 +65,31 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.values.toSet === Set(1L, 10L, 20L))
   }
 
+  test("short-typed edge columns (SQL signature) and null-holding " +
+    "nullable int columns (null-checked accumulators) converge like " +
+    "union-find") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DataType, IntegerType, ShortType,
+      StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val edges = Seq((1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 21))
+    val want = unionFind(edges.map { case (a, b) => (a.toLong, b.toLong) })
+    def run(t: DataType, rows: Seq[Row]): Map[Long, Long] = {
+      val schema = StructType(Seq(StructField("u", t), StructField("v", t)))
+      ConnectedComponents.run(spark.createDataFrame(rows.asJava, schema))
+        .collect().map(r => (r.get(0), r.get(1)) match {
+          case (a: Short, b: Short) => a.toLong -> b.toLong
+          case (a: Int, b: Int) => a.toLong -> b.toLong
+        }).toMap
+    }
+    assert(run(ShortType,
+      edges.map { case (a, b) => Row(a.toShort, b.toShort) }) === want)
+    // a null endpoint is no edge: least/greatest skip it and the self-
+    // loop filter drops the row
+    assert(run(IntegerType, edges.map { case (a, b) => Row(a, b) } :+
+      Row(null, 5) :+ Row(7, null) :+ Row(null, null)) === want)
+  }
+
   test("disjoint components keep distinct roots") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
     val got = ccLabels(edges)
