@@ -31,10 +31,16 @@ import org.apache.spark.util.SerializableConfiguration
   * itself — one pass, no driver work, crash-safe (uncommitted temp
   * files are dot-prefixed and invisible to readers/compaction).
   *
-  * For seq-contiguous files, pre-shape the frame with
-  * `repartitionByRange(dt, seq).sortWithinPartitions` like TapeWriter;
-  * the format does not require it (reference files from parallel shard
-  * workers overlap in seq ranges too).
+  * The file layout follows the frame's partitioning, so the caller
+  * shapes it: `TapeWriter.write` range-partitions a batch frame on
+  * (dt, seq), which gives range-shaped files with disjoint seq ranges;
+  * the streaming recorder writes each micro-batch as the source
+  * partitioned it, one partition per shard, which gives one file per
+  * (shard, day, trigger), and those seq ranges may overlap (the
+  * reference's files from parallel shard workers overlap too). Both
+  * sort within partitions on (dt, seq) so each file's lines are in seq
+  * order. Readers, [[graft.vcr.TapeFsck]] and
+  * [[graft.vcr.TapeCompactor]] accept either layout.
   */
 object TapeWrite {
   /** schema accepted by the ingest face (option ingest=true) */

@@ -3,7 +3,7 @@ package graft.streaming
 import java.time.LocalDateTime
 
 import graft.vcr.{Tape, TapeWriter, TimeArg}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,6 +15,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * map to trigger interval + source rate options, checkpointing
   * replaces the DynamoDB lease table for exactly-once progress.
   *
+  * Tape layout of a recording: each micro-batch is flushed where it was
+  * read, like the reference's per-worker buffer flush
+  * (KinesisRecorder.java:23-47) — the kinesis-shaped source plans one
+  * partition per shard, so every trigger writes one
+  * `{firstSeq}-{lastSeq}.txt` file per (shard, day), in one Spark job
+  * with no shuffle. Shards interleave in sequence number, so files of a
+  * recorded tape may overlap in seq range (the tape contract allows
+  * it; a batch [[TapeWriter.write]] tape instead holds range-shaped,
+  * seq-disjoint files). A zone-map seek ([[graft.vcr.TapeManifest]])
+  * on a recorded tape stays correct but is less selective: it may open
+  * up to one file per shard per trigger of the requested range.
+  *
   * Replay-as-a-stream (the reference replays to Kinesis; R4 re-emits
   * the tape as a Spark stream) is a file-source read of the pruned day
   * range, rate-limited with maxFilesPerTrigger — the analog of pacing
@@ -24,6 +36,19 @@ object StreamRecorder {
 
   /** R1: record a stream of `data BINARY, seq BIGINT, ts TIMESTAMP`
     * onto the tape. One tape flush per micro-batch.
+    *
+    * The file count follows the source's partitioning: each trigger
+    * writes one file per (input partition, day), at most `numFiles`
+    * (or `defaultParallelism` when `numFiles` is 0) partitions per
+    * trigger. From the kinesis-shaped source that is one file per
+    * (shard, day) while shards do not outnumber the cap.
+    *
+    * @param numFiles cap on a micro-batch's partitions; `0` caps at
+    *                 `defaultParallelism`. A micro-batch with more
+    *                 partitions (one whose plan has a shuffle in it
+    *                 has `spark.sql.shuffle.partitions`) is merged with
+    *                 `coalesce` first, still shuffle-free, so a file
+    *                 may then hold several partitions' records.
     */
   def record(records: DataFrame, root: String, stream: String,
              checkpoint: String, numFiles: Int = 0): StreamingQuery =
@@ -31,10 +56,23 @@ object StreamRecorder {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        TapeWriter.ingest(batch, root, stream, numFiles, SaveMode.Append)
-        ()
+        flush(batch, root, stream, numFiles)
       }
       .start()
+
+  /** Appends one micro-batch to the tape from the partitions the source
+    * gave it ([[TapeWriter.append]]): one Spark job, no shuffle, no
+    * range-sampling pass. `coalesce` to the cap leaves a batch with no
+    * more partitions than that as it is (without preferred locations,
+    * as from the kinesis-shaped source, one partition per task), so
+    * the batch's partition count is never read — reading it plans the
+    * batch once more, tens of ms per trigger.
+    */
+  private def flush(batch: DataFrame, root: String, stream: String,
+                    numFiles: Int): Unit =
+    TapeWriter.append(batch.coalesce(if (numFiles > 0) numFiles
+      else batch.sparkSession.sparkContext.defaultParallelism),
+      s"$root/$stream")
 
   /** R27: record WITH index maintenance — the V13/V14 loop closed at
     * the recorder: after each micro-batch's tape flush, the zone-map
@@ -57,6 +95,8 @@ object StreamRecorder {
     * (`TapeCompactor.ExpireResult.days` → scoped refresh, see VcrCli's
     * expire verb); the unscoped full walk stays available as the
     * explicit audit path (`VcrCli index`).
+    *
+    * Tape files and `numFiles` are as in [[record]].
     */
   def recordIndexed(records: DataFrame, root: String, stream: String,
                     checkpoint: String, numFiles: Int = 0): StreamingQuery =
@@ -67,7 +107,7 @@ object StreamRecorder {
         // persist carries the batch from the tape flush to the
         // footprint scan — without it the source would be re-pulled
         val b = batch.persist()
-        TapeWriter.ingest(b, root, stream, numFiles, SaveMode.Append)
+        flush(b, root, stream, numFiles)
         val dts = b.select(Tape.dtOf(col(Tape.TsCol)).as(Tape.DtCol))
           .distinct().collect().map(_.getString(0)).toSet
         b.unpersist()

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Here the same layout is a Hive-partitioned text dataset:
   * `{root}/{stream}/dt={yyyy-MM-dd}/{firstSeq}-{lastSeq}.txt` — so a
-  * date-range replay is partition pruning in the Catalyst planner
-  * instead of a driver-side listing loop, and encode/decode are
-  * codegen'd column expressions instead of per-record Java.
+  * date-range replay opens only the files of its days (partition
+  * pruning in the Catalyst planner), and encode/decode are codegen'd
+  * column expressions instead of per-record Java.
   *
   * Logical record schema on the way in: `data BINARY, seq BIGINT,
   * ts TIMESTAMP` (ts drives the dt partition; seq drives file naming

@@ -9,9 +9,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 /** Tape maintenance: merge a day-range's small flush files into
-  * ~`targetBytes` files, preserving payload content, sequence order and
-  * the `{firstSeq}-{lastSeq}` naming contract
-  * (reference: InjectableS3Emitter.java:38-44).
+  * ~`targetBytes` files, preserving payload content and the
+  * `{firstSeq}-{lastSeq}` naming contract
+  * (reference: InjectableS3Emitter.java:38-44). Sources join in
+  * first-seq order, so a merged file's lines stay in seq order when the
+  * sources' seq ranges are disjoint (batch-written tapes), not when they
+  * overlap (recorded tapes, one file per shard per trigger).
   *
   * A recorder flushing on the reference's default 60 s timer writes
   * 1,440 objects per day per worker regardless of size; replaying a

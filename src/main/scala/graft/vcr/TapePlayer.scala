@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * The reference lists each day folder in `[start, end)` on the driver,
   * filters objects by last-modified, splits lines, Base64-decodes, and
   * re-emits in ≤500-record / ≤1 MB PutRecords batches. Spark-first:
-  * the day loop + listing is a partition-pruned scan of the `dt=` Hive
-  * layout (the planner prunes directories, no driver listing loop), the
-  * line split/skip-empties/decode are codegen'd expressions, and batch
+  * the day loop is a partition-pruned scan of the `dt=` Hive layout
+  * (the listing is not pruned — see [[read]]), the line
+  * split/skip-empties/decode are codegen'd expressions, and batch
   * assembly is a per-partition fold — per-partition batching matches the
   * reference, whose batches never span S3 objects read on different
   * threads.
@@ -41,8 +41,10 @@ object TapePlayer {
     val dir = s"$root/$stream"
     val base = if (!mtimeWindow) {
       // read.text keeps the inferred dt= partition column, so the
-      // day-range filter is partition pruning in the planner — the Spark
-      // form of the reference's "list only day folders in range" loop.
+      // day-range filter prunes the files the scan opens. It does not
+      // prune the listing: InMemoryFileIndex lists every dt= directory
+      // of the tape before the planner drops the days outside the
+      // range, where the reference lists only the day folders in range.
       spark.read.option("basePath", dir).text(dir)
         .filter(col(Tape.DtCol) >= lit(start.toLocalDate.toString) &&
           col(Tape.DtCol) <= lit(endEff.toLocalDate.toString))

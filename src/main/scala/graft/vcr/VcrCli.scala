@@ -1,7 +1,13 @@
 package graft.vcr
 
+import java.io.PrintStream
+import java.util.UUID
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** CLI surface mirroring the reference's `kinesis-vcr record|play|estimate`
   * (reference: KinesisVcr.java:25-110). Configuration comes from the same
@@ -49,14 +55,31 @@ object VcrCli {
             // root is the lease table — rerunning `record` appends only
             // what arrived since. VCR_BUFFER_SIZE_BYTES bounds each
             // micro-batch (≅ one flushed recorder buffer per shard).
-            val q = graft.streaming.StreamRecorder.recordFromKinesis(
-              spark, ep, stream, root, s"$root/.checkpoints/$stream",
-              maxBytesPerTrigger = config.bufferSizeBytes)
-            q.processAllAvailable()
-            q.stop()
-            val n = spark.read.format("tape").load(s"$root/$stream").count()
+            // one JSON line per trigger as it ends; the count reported
+            // is this run's, summed from the same progress events
+            val log = new TriggerLog(Console.out)
+            spark.streams.addListener(log)
+            val (n, complete) = try {
+              val q = graft.streaming.StreamRecorder.recordFromKinesis(
+                spark, ep, stream, root, s"$root/.checkpoints/$stream",
+                maxBytesPerTrigger = config.bufferSizeBytes)
+              log.follow(q.id)
+              try q.processAllAvailable() finally q.stop()
+              // the tape and checkpoint are committed by now: a slow
+              // listener bus costs the count its last triggers, not the
+              // recording its success
+              val drained =
+                try {
+                  org.apache.spark.graft.SparkInternals.drainListenerBus(
+                    spark.sparkContext)
+                  true
+                } catch { case _: java.util.concurrent.TimeoutException => false }
+              (log.records, drained)
+            } finally spark.streams.removeListener(log)
             println(s"Recorded stream $stream from endpoint $ep to " +
-              s"$root/$stream ($n records on tape)")
+              s"$root/$stream ($n records on tape from this run" +
+              (if (complete) ")"
+               else "; partial: the listener bus did not drain in time)"))
           case (_, Some(in)) =>
             // events-shaped input: event_id ≅ sequence number, ts, props payload
             val records =
@@ -216,5 +239,54 @@ object VcrCli {
         throw new IllegalArgumentException(
           s"Unknown command ${other.getOrElse("<none>")}: expected record|play|estimate|expire|index|digest")
     }
+  }
+}
+
+/** `record`'s per-trigger report: one JSON line per trigger of the
+  * followed query, printed to `out` as its progress event arrives —
+  * `{"event":"trigger","batchId":…,"numInputRows":…,"durationMs":{…}}`
+  * with the `addBatch`, `latestOffset`, `queryPlanning`, `walCommit`,
+  * `commitOffsets` and `triggerExecution` phases Spark timed (a phase a
+  * trigger skipped is absent, as in Spark's own progress JSON). Events
+  * that arrive before [[follow]] names the query are held, then printed
+  * or dropped by query id. [[records]] sums `numInputRows` over every
+  * printed trigger; unlike `recentProgress` it is not capped at the
+  * last 100 triggers.
+  */
+private[vcr] final class TriggerLog(out: PrintStream)
+  extends StreamingQueryListener {
+  import StreamingQueryListener._
+
+  private val phases = Seq("addBatch", "latestOffset", "queryPlanning",
+    "walCommit", "commitOffsets", "triggerExecution")
+  private var query: Option[UUID] = None
+  private val held = mutable.ArrayBuffer.empty[StreamingQueryProgress]
+  private var rows = 0L
+
+  def follow(id: UUID): Unit = synchronized {
+    query = Some(id)
+    held.filter(_.id == id).foreach(emit)
+    held.clear()
+  }
+
+  def records: Long = synchronized(rows)
+
+  override def onQueryProgress(event: QueryProgressEvent): Unit = synchronized {
+    query match {
+      case Some(id) => if (event.progress.id == id) emit(event.progress)
+      case None => held += event.progress
+    }
+  }
+
+  override def onQueryStarted(event: QueryStartedEvent): Unit = ()
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
+
+  private def emit(p: StreamingQueryProgress): Unit = {
+    rows += p.numInputRows
+    val took = phases.flatMap(k =>
+      Option(p.durationMs.get(k)).map(v => s""""$k":$v"""))
+    out.println(s"""{"event":"trigger","batchId":${p.batchId},""" +
+      s""""numInputRows":${p.numInputRows},""" +
+      s""""durationMs":${took.mkString("{", ",", "}")}}""")
   }
 }
