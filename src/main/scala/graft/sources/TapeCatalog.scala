@@ -62,7 +62,7 @@ class TapeCatalog extends CatalogPlugin with TableCatalog
     val path = new Path(new Path(root), ident.name())
     if (!ident.namespace().sameElements(Namespace) || !fs.exists(path))
       throw new NoSuchTableException(ident)
-    new TapeTable(path.toString)
+    new TapeTable(Seq(path.toString))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

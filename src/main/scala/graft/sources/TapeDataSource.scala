@@ -4,12 +4,10 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
-import scala.collection.mutable.ArrayBuffer
-
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.vcr.Tape
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
@@ -21,22 +19,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** The tape as a first-class Spark DataSource V2: `spark.read
-  * .format("tape").load("{root}/{stream}")`.
+/** The tape as a first-class Spark DataSource V2, and the tape's one
+  * reader: `spark.read.format("tape").load("{root}/{stream}")`, or
+  * `load(file, …)` over data files named explicitly (a manifest seek, an
+  * mtime window, a refresh's new files). Every tape read in graft —
+  * replay, estimate, fsck, diff, the manifest — is this scan.
   *
   * Schema: `payload BINARY, dt STRING, src STRING, seq_first BIGINT,
   * seq_last BIGINT` — the file-name sequence range (reference:
-  * InjectableS3Emitter.java:38-44) surfaces as metadata columns, which
-  * the plain text reader cannot give you.
+  * InjectableS3Emitter.java:38-44) surfaces as columns. The raw Base64
+  * `line` is a metadata column, produced only when selected; `payload`
+  * is decoded only when selected, so a scan of `line` reads a corrupt
+  * file without throwing. Empty lines are skipped for every column
+  * (reference: KinesisPlayer.java:170-172).
   *
   * Scale behaviors baked into the scan:
   * - `dt` filters push down into directory pruning at planning time —
   *   a day-range replay never lists, let alone reads, other days
   *   (reference behavior: KinesisPlayer.java:221-246).
-  * - Files bin-pack into input partitions of ~`TapeScan.TargetSplit`
-  *   bytes, so a tape of millions of small flush files doesn't become
-  *   millions of tasks, and one task never reads one huge day alone
-  *   unless it is genuinely one file.
+  * - Files are read whole and packed least-loaded by bytes
+  *   ([[TapeListing.pack]]): about one split per core for a tape of
+  *   small flush files, about one per 128 MB for a large one; the
+  *   largest files each start a different split.
   */
 class TapeDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tape"
@@ -45,10 +49,19 @@ class TapeDataSource extends TableProvider with DataSourceRegister {
     if (options.getBoolean("ingest", false)) TapeWrite.IngestSchema
     else TapeTable.Schema
 
+  /** `load(path)` arrives as `path`, `load(p1, p2, …)` as Spark's JSON
+    * `paths` list.
+    */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TapeTable(properties.get("path"),
+                        properties: util.Map[String, String]): Table = {
+    val paths = Option(properties.get("paths")) match {
+      case Some(json) =>
+        new ObjectMapper().readValue(json, classOf[Array[String]]).toSeq
+      case None => Option(properties.get("path")).toSeq
+    }
+    new TapeTable(paths,
       "true".equalsIgnoreCase(properties.getOrDefault("ingest", "false")))
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -62,13 +75,15 @@ object TapeTable {
     StructField("seq_last", LongType, nullable = true)))
 }
 
-/** Read face by default; with `ingest=true` the table exposes the
-  * append-only write face instead (schema data/seq/ts — see TapeWrite).
+/** Read face by default over tape directories and/or data files; with
+  * `ingest=true` the table exposes the append-only write face of one
+  * tape directory instead (schema data/seq/ts — see TapeWrite).
   */
-class TapeTable(path: String, ingest: Boolean = false)
-  extends Table with SupportsRead with SupportsWrite {
-  require(path != null, "tape source requires a path")
-  override def name(): String = s"tape($path)"
+class TapeTable(paths: Seq[String], ingest: Boolean = false)
+  extends Table with SupportsRead with SupportsWrite
+  with SupportsMetadataColumns {
+  require(paths.nonEmpty, "tape source requires a path")
+  override def name(): String = s"tape(${paths.mkString(", ")})"
   override def schema(): StructType =
     if (ingest) TapeWrite.IngestSchema else TapeTable.Schema
   override def capabilities(): util.Set[TableCapability] =
@@ -76,19 +91,27 @@ class TapeTable(path: String, ingest: Boolean = false)
     else util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
 
+  override def metadataColumns(): Array[MetadataColumn] =
+    Array(new MetadataColumn {
+      override def name(): String = Tape.LineCol
+      override def dataType(): DataType = StringType
+      override def isNullable: Boolean = false
+    })
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     require(!ingest, "an ingest=true tape table is write-only")
-    new TapeScanBuilder(path, options.getInt("maxFilesPerTrigger", 0),
+    new TapeScanBuilder(paths, options.getInt("maxFilesPerTrigger", 0),
       options.getLong("maxBytesPerTrigger", 0L))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(ingest, "reads use the default table; pass ingest=true to write")
-    new TapeWriteBuilder(path, info)
+    require(paths.size == 1, "a tape is written to one directory")
+    new TapeWriteBuilder(paths.head, info)
   }
 }
 
-class TapeScanBuilder(path: String, maxFilesPerTrigger: Int = 0,
+class TapeScanBuilder(paths: Seq[String], maxFilesPerTrigger: Int = 0,
                       maxBytesPerTrigger: Long = 0L)
   extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
@@ -113,16 +136,13 @@ class TapeScanBuilder(path: String, maxFilesPerTrigger: Int = 0,
   override def build(): Scan = {
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
-    new TapeScan(path, dtFilters, required,
+    new TapeScan(paths, dtFilters, required,
       new SerializableConfiguration(conf), maxFilesPerTrigger,
       maxBytesPerTrigger)
   }
 }
 
 object TapeScan {
-  /** target bytes per input partition when bin-packing tape files */
-  val TargetSplit: Long = 128L * 1024 * 1024
-
   def isPrunableDtFilter(f: Filter): Boolean = f match {
     case EqualTo(a, _: String) => a == Tape.DtCol
     case GreaterThan(a, _: String) => a == Tape.DtCol
@@ -145,66 +165,45 @@ object TapeScan {
   }
 }
 
-final case class TapeFileSlice(file: String, dt: String, size: Long,
-                               seqFirst: Long, seqLast: Long)
-
 final case class TapeInputPartition(files: Array[TapeFileSlice])
   extends InputPartition
 
-class TapeScan(path: String, dtFilters: Array[Filter], required: StructType,
-               conf: SerializableConfiguration,
-               maxFilesPerTrigger: Int = 0,
-               maxBytesPerTrigger: Long = 0L) extends Scan with Batch {
+class TapeScan(paths: Seq[String], dtFilters: Array[Filter],
+               required: StructType, conf: SerializableConfiguration,
+               maxFilesPerTrigger: Int, maxBytesPerTrigger: Long)
+  extends Scan with Batch {
+
+  def this(path: String, dtFilters: Array[Filter], required: StructType,
+           conf: SerializableConfiguration) =
+    this(Seq(path), dtFilters, required, conf, 0, 0L)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
-  : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TapeMicroBatchStream(path, dtFilters, required, conf,
+  : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(paths.size == 1, "a tape stream replays one tape directory")
+    new TapeMicroBatchStream(paths.head, dtFilters, required, conf,
       maxFilesPerTrigger, maxBytesPerTrigger)
-  override def description(): String =
-    s"TapeScan path=$path prunedBy=[${dtFilters.mkString(", ")}]"
+  }
+  override def description(): String = {
+    val from = if (paths.size == 1) s"path=${paths.head}" else s"files=${paths.size}"
+    s"TapeScan $from prunedBy=[${dtFilters.mkString(", ")}]"
+  }
 
-  private val SeqRangeRe = "(\\d+)-(\\d+)(?:\\.txt)?".r
-
-  /** Driver-side planning: list ONLY day directories matching the
-    * pushed dt predicates, then bin-pack files into ~TargetSplit
-    * partitions (largest-first first-fit).
+  /** Driver-side planning: list ONLY the day directories matching the
+    * pushed dt predicates (or stat the named files), then pack the
+    * files least-loaded by bytes over the session's parallelism.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, conf.value)
-    if (!fs.exists(root)) return Array.empty
-    val slices = ArrayBuffer[TapeFileSlice]()
-    for (dtDir <- fs.listStatus(root) if dtDir.isDirectory) {
-      val name = dtDir.getPath.getName
-      if (name.startsWith(s"${Tape.DtCol}=")) {
-        val dt = name.stripPrefix(s"${Tape.DtCol}=")
-        if (dtFilters.forall(TapeScan.dtMatches(dt, _))) {
-          for (f <- fs.listStatus(dtDir.getPath)
-               if f.isFile && !f.getPath.getName.startsWith("_")
-                 && !f.getPath.getName.startsWith(".")) {
-            val (sf, sl) = f.getPath.getName match {
-              case SeqRangeRe(a, b) => (a.toLong, b.toLong)
-              case _ => (-1L, -1L)
-            }
-            slices += TapeFileSlice(f.getPath.toString, dt, f.getLen, sf, sl)
-          }
-        }
-      }
+    val keep = (dt: String) => dtFilters.forall(TapeScan.dtMatches(dt, _))
+    val slices = paths.flatMap { p =>
+      val path = new Path(p)
+      TapeListing.resolve(path.getFileSystem(conf.value), path, keep)
     }
-    // largest-first first-fit bin-packing to ~TargetSplit bytes
-    val bins = ArrayBuffer[(ArrayBuffer[TapeFileSlice], Long)]()
-    for (s <- slices.sortBy(-_.size)) {
-      bins.find(_._2 + s.size <= TapeScan.TargetSplit) match {
-        case Some(bin) =>
-          bin._1 += s
-          val i = bins.indexOf(bin)
-          bins(i) = (bin._1, bin._2 + s.size)
-        case None => bins += ((ArrayBuffer(s), s.size))
-      }
-    }
-    bins.map(b => TapeInputPartition(b._1.toArray): InputPartition).toArray
+    val parallelism = org.apache.spark.sql.SparkSession.active
+      .sparkContext.defaultParallelism
+    TapeListing.pack(slices, parallelism)
+      .map(b => TapeInputPartition(b.toArray): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -217,7 +216,7 @@ class TapeReaderFactory(required: StructType, conf: SerializableConfiguration)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val files = partition.asInstanceOf[TapeInputPartition].files
     new PartitionReader[InternalRow] {
-      private val fieldIdx = required.fieldNames
+      private val fieldNames = required.fieldNames
       private var fileIdx = -1
       private var reader: BufferedReader = _
       private var current: TapeFileSlice = _
@@ -248,8 +247,9 @@ class TapeReaderFactory(required: StructType, conf: SerializableConfiguration)
       }
 
       override def get(): InternalRow = {
-        val values = fieldIdx.map {
+        val values = fieldNames.map {
           case Tape.PayloadCol => java.util.Base64.getDecoder.decode(line)
+          case Tape.LineCol => UTF8String.fromString(line)
           case Tape.DtCol => UTF8String.fromString(current.dt)
           case "src" => UTF8String.fromString(current.file)
           case "seq_first" =>

@@ -1,13 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
-
-import graft.vcr.Tape
 
 /** Streaming face of the tape source: `spark.readStream.format("tape")`
   * replays the archive as a Structured Streaming source — the VCR's
@@ -34,34 +32,15 @@ class TapeMicroBatchStream(path: String, dtFilters: Array[Filter],
     override def json(): String = s"""{"fileCount":$count}"""
   }
 
-  private val SeqRangeRe = "(\\d+)-(\\d+)(?:\\.txt)?".r
-
   /** tape files matching the dt filters, in (dt, firstSeq, name) order
     * — append-stable (see class doc); plain name order is NOT (names
     * sort lexicographically: "101-" < "21-").
     */
   private def listFiles(): Array[TapeFileSlice] = {
     val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, conf.value)
-    if (!fs.exists(root)) return Array.empty
-    val out = scala.collection.mutable.ArrayBuffer[TapeFileSlice]()
-    for (dtDir <- fs.listStatus(root).sortBy(_.getPath.getName)
-         if dtDir.isDirectory &&
-           dtDir.getPath.getName.startsWith(s"${Tape.DtCol}=")) {
-      val dt = dtDir.getPath.getName.stripPrefix(s"${Tape.DtCol}=")
-      if (dtFilters.forall(TapeScan.dtMatches(dt, _))) {
-        for (f <- fs.listStatus(dtDir.getPath)
-             if f.isFile && !f.getPath.getName.startsWith("_")
-               && !f.getPath.getName.startsWith(".")) {
-          val (sf, sl) = f.getPath.getName match {
-            case SeqRangeRe(a, b) => (a.toLong, b.toLong)
-            case _ => (-1L, -1L)
-          }
-          out += TapeFileSlice(f.getPath.toString, dt, f.getLen, sf, sl)
-        }
-      }
-    }
-    out.sortBy(f => (f.dt, f.seqFirst, f.file)).toArray
+    TapeListing.list(root.getFileSystem(conf.value), root,
+        dt => dtFilters.forall(TapeScan.dtMatches(dt, _)))
+      .sortBy(f => (f.dt, f.seqFirst, f.file)).toArray
   }
 
   override def getDefaultReadLimit: ReadLimit =

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.vcr.{Tape, TapeCompactor, TapeManifest}
+import graft.sources.TapeListing
+import graft.vcr.{TapeCompactor, TapeManifest}
 
 /** R33: STANDING tape retention — V11's `expire` verb run as a
   * continuous maintenance stream instead of a manual CLI pass (the R32
@@ -50,15 +51,7 @@ object StreamExpire {
     val dir = new org.apache.hadoop.fs.Path(s"$root/$stream")
     val fs = org.apache.hadoop.fs.FileSystem
       .get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return TapeCompactor.ExpireResult(0, 0L, 0L)
-    val prefix = s"${Tape.DtCol}="
-    val days = fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .flatMap { st =>
-        try Some(java.time.LocalDate.parse(
-          st.getPath.getName.stripPrefix(prefix)))
-        catch { case _: java.time.format.DateTimeParseException => None }
-      }
+    val days = TapeListing.days(fs, dir).flatMap(d => TapeCompactor.parseDay(d._1))
     if (days.isEmpty) return TapeCompactor.ExpireResult(0, 0L, 0L)
     val frontier = days.max
     val keepFrom = frontier.minusDays(policy.retainDays - 1L)

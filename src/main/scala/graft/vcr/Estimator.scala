@@ -1,10 +1,10 @@
 package graft.vcr
 
 import java.time.LocalDateTime
-import java.time.temporal.ChronoUnit
 
+import graft.sources.TapeListing
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Replay-time estimation (reference: KinesisVcr.java:76-100, 120-149):
   * Σ tape-object sizes in range, 1 MB/s per open shard, integer-division
@@ -12,10 +12,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * humanized to the largest unit.
   *
   * The size sum is a pure file-metadata walk over the pruned `dt=` day
-  * directories — same O(#files-in-range) listing the reference does, no
-  * data reads. (At extreme file counts a distributed listing via a Spark
-  * job over day prefixes would shard it; sizes never require opening
-  * objects.)
+  * directories ([[TapeListing]], the listing every tape read uses) —
+  * same O(#files-in-range) listing the reference does, no data reads.
+  * (At extreme file counts a distributed listing via a Spark job over
+  * day prefixes would shard it; sizes never require opening objects.)
   */
 object Estimator {
 
@@ -25,26 +25,13 @@ object Estimator {
   def estimate(conf: Configuration, root: String, stream: String,
                start: LocalDateTime, end: Option[LocalDateTime],
                shards: Int): Estimate = {
-    val endEff = TimeArg.effectiveEnd(start, end)
+    val (from, to) = TimeArg.days(start, end)
     val dir = new Path(s"$root/$stream")
-    val fs = FileSystem.get(dir.toUri, conf)
-    var files = 0L
-    var bytes = 0L
-    // Day loop over [start, endEff] — mirrors KinesisPlayer.java:221-227;
-    // each iteration lists exactly one dt= directory.
-    var d = start.toLocalDate
-    val lastDay = endEff.toLocalDate
-    while (!d.isAfter(lastDay)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        fs.listStatus(dayDir).foreach { st =>
-          if (st.isFile) { files += 1; bytes += st.getLen }
-        }
-      }
-      d = d.plus(1, ChronoUnit.DAYS)
-    }
+    val files = TapeListing.list(dir.getFileSystem(conf), dir,
+      dt => dt >= from && dt <= to)
+    val bytes = files.map(_.size).sum
     val minutes = minutesFor(bytes, shards)
-    Estimate(files, bytes, shards, minutes, humanize(minutes))
+    Estimate(files.size.toLong, bytes, shards, minutes, humanize(minutes))
   }
 
   /** Shard count discovered from the target stream's endpoint, like the
@@ -81,11 +68,7 @@ object Estimator {
                       start: LocalDateTime, end: Option[LocalDateTime],
                       shards: Int): Estimate = {
     import org.apache.spark.sql.functions._
-    val endEff = TimeArg.effectiveEnd(start, end)
-    val tape = spark.read.format("tape").load(s"$root/$stream")
-      .filter(col(Tape.DtCol) >= lit(start.toLocalDate.toString) &&
-        col(Tape.DtCol) <= lit(endEff.toLocalDate.toString))
-    val row = tape.agg(
+    val row = TapePlayer.read(spark, root, stream, start, end).agg(
       countDistinct(col("src")).as("files"),
       coalesce(sum(octet_length(col(Tape.PayloadCol))), lit(0L)).as("bytes"))
       .head()

@@ -1,6 +1,6 @@
 package graft.vcr
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The tape format, re-expressed for Spark.
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Here the same layout is a Hive-partitioned text dataset:
   * `{root}/{stream}/dt={yyyy-MM-dd}/{firstSeq}-{lastSeq}.txt` — so a
-  * date-range replay opens only the files of its days (partition
-  * pruning in the Catalyst planner), and encode/decode are codegen'd
-  * column expressions instead of per-record Java.
+  * date-range replay lists and opens only the files of its days (the
+  * [[scan]]'s `dt` pushdown), and the recorder's encode is a codegen'd
+  * column expression instead of per-record Java.
   *
   * Logical record schema on the way in: `data BINARY, seq BIGINT,
   * ts TIMESTAMP` (ts drives the dt partition; seq drives file naming
@@ -43,6 +43,25 @@ object Tape {
     * in-day filter the reference approximates with object mtime).
     */
   def dtOf(ts: Column): Column = date_format(ts, "yyyy-MM-dd")
+
+  /** The tape at `dir` through its one reader,
+    * [[graft.sources.TapeScan]]: `payload, dt, src, seq_first,
+    * seq_last`, plus the raw `line` when selected. A `dt` filter prunes
+    * the day directories before they are listed.
+    */
+  def scan(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format("tape").load(dir)
+
+  /** Exactly the data `files` of the tape at `dir`, through the same
+    * reader; no directory is listed.
+    */
+  def scanFiles(spark: SparkSession, dir: String,
+                files: Seq[String]): DataFrame =
+    if (files.isEmpty) scan(spark, dir).where(lit(false))
+    else spark.read.format("tape").load(files: _*)
+
+  /** A tape row's file name: the basename of its `src` path. */
+  def fileName: Column = regexp_extract(col("src"), "([^/]+)$", 1)
 
   /** Project a record frame (data/seq/ts) into tape-layout columns. */
   def toLines(records: DataFrame): DataFrame =

@@ -4,6 +4,7 @@ import java.time.LocalDateTime
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.{TapeFileSlice, TapeListing}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
@@ -37,48 +38,34 @@ object TapeCompactor {
   final case class Result(groupsMerged: Int, filesBefore: Long,
                           filesAfter: Long)
 
-  private val SeqRangeRe = "(\\d+)-(\\d+)(?:\\.txt)?".r
-
   def compact(spark: SparkSession, root: String, stream: String,
               start: LocalDateTime, end: Option[LocalDateTime],
               targetBytes: Long = 128L * 1024 * 1024): Result = {
-    val endEff = TimeArg.effectiveEnd(start, end)
+    val (from, to) = TimeArg.days(start, end)
     val dir = new Path(s"$root/$stream")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(dir.toUri, conf)
+    // only seq-named files can join a group: a merged name must bound them
+    def ranged() = TapeListing.list(fs, dir, dt => dt >= from && dt <= to)
+      .filter(_.seqFirst >= 0)
 
     // driver-side metadata pass: per day, bin-pack files (in seq order)
+    val before = ranged()
     val groups = ArrayBuffer[Group]()
-    var filesBefore = 0L
-    var d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        val ranged = fs.listStatus(dayDir).toSeq
-          .filter(st => st.isFile && (st.getPath.getName match {
-            case SeqRangeRe(_, _) => true
-            case _ => false
-          }))
-          .map { st =>
-            val SeqRangeRe(a, b) = st.getPath.getName
-            (st.getPath.toString, a.toLong, b.toLong, st.getLen)
-          }
-          .sortBy(_._2)
-        filesBefore += ranged.size
-        var bucket = ArrayBuffer[(String, Long, Long, Long)]()
-        var size = 0L
-        def flush(): Unit = if (bucket.size > 1) {
-          groups += Group(d.toString, bucket.map(_._1).toSeq,
-            bucket.map(_._2).min, bucket.map(_._3).max, size)
-          bucket = ArrayBuffer(); size = 0L
-        } else { bucket = ArrayBuffer(); size = 0L }
-        for (f <- ranged) {
-          if (size > 0 && size + f._4 > targetBytes) flush()
-          bucket += f; size += f._4
-        }
-        flush()
+    for ((dt, files) <- before.groupBy(_.dt).toSeq.sortBy(_._1)) {
+      var bucket = ArrayBuffer[TapeFileSlice]()
+      var size = 0L
+      def flush(): Unit = {
+        if (bucket.size > 1)
+          groups += Group(dt, bucket.map(_.file).toSeq,
+            bucket.map(_.seqFirst).min, bucket.map(_.seqLast).max, size)
+        bucket = ArrayBuffer(); size = 0L
       }
-      d = d.plusDays(1)
+      for (f <- files.sortBy(_.seqFirst)) {
+        if (size > 0 && size + f.size > targetBytes) flush()
+        bucket += f; size += f.size
+      }
+      flush()
     }
 
     // distributed merge: one task per group
@@ -88,7 +75,7 @@ object TapeCompactor {
     if (groups.nonEmpty) {
       sc.parallelize(groups.toSeq, math.min(groups.size, 64)).foreach { g =>
         val gfs = FileSystem.get(new java.net.URI(tapeDir), serConf.value)
-        val out = new Path(s"$tapeDir/${Tape.DtCol}=${g.dt}/" +
+        val out = new Path(new Path(g.files.head).getParent,
           s"${g.first}-${g.last}.txt")
         val tmp = new Path(out.getParent, s".${out.getName}.compacting")
         val os = gfs.create(tmp, true)
@@ -117,16 +104,7 @@ object TapeCompactor {
       }
     }
 
-    var filesAfter = 0L
-    d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir))
-        filesAfter += fs.listStatus(dayDir).count(st => st.isFile &&
-          !st.getPath.getName.startsWith("."))
-      d = d.plusDays(1)
-    }
-    Result(groups.size, filesBefore, filesAfter)
+    Result(groups.size, before.size.toLong, ranged().size.toLong)
   }
 
   /** `days` carries the deleted partition values so the caller can
@@ -155,40 +133,26 @@ object TapeCompactor {
              keepFrom: java.time.LocalDate,
              dryRun: Boolean = false): ExpireResult = {
     val dir = new Path(s"$root/$stream")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(dir.toUri, conf)
-    if (!fs.exists(dir)) return ExpireResult(0, 0L, 0L)
-    val prefix = s"${Tape.DtCol}="
-    val old = fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .flatMap { st =>
-        val v = st.getPath.getName.stripPrefix(prefix)
-        try {
-          val day = java.time.LocalDate.parse(v)
-          if (day.isBefore(keepFrom)) Some(st.getPath) else None
-        } catch { case _: java.time.format.DateTimeParseException => None }
-      }
-    var days = 0
-    var files = 0L
-    var bytes = 0L
-    val deletedDts = ArrayBuffer[String]()
-    old.foreach { p =>
-      var dayFiles = 0L
-      var dayBytes = 0L
-      fs.listStatus(p).foreach { st =>
-        if (st.isFile) { dayFiles += 1; dayBytes += st.getLen }
-      }
+    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    val old = TapeListing.days(fs, dir)
+      .filter(d => parseDay(d._1).exists(_.isBefore(keepFrom)))
+    val files = TapeListing.listDays(fs, dir, old.map(_._1))
+    old.foreach { case (_, p) =>
       // the ledger must never claim a deletion that didn't happen —
       // a false "Deleted N partitions" is a compliance lie. HDFS
       // delete() signals failure by returning false, not throwing
       // (compact() checks its rename() for the same reason); fail
-      // LOUDLY and count nothing for this day.
+      // LOUDLY and count nothing.
       if (!dryRun && !fs.delete(p, true))
         throw new java.io.IOException(
           s"retention failed to delete $p — partition still on disk")
-      days += 1; files += dayFiles; bytes += dayBytes
-      deletedDts += p.getName.stripPrefix(prefix)
     }
-    ExpireResult(days, files, bytes, deletedDts.toSeq)
+    ExpireResult(old.size, files.size.toLong, files.map(_.size).sum,
+      old.map(_._1))
   }
+
+  /** A `dt` value as a date; None for a directory that is not a day. */
+  private[graft] def parseDay(dt: String): Option[java.time.LocalDate] =
+    try Some(java.time.LocalDate.parse(dt))
+    catch { case _: java.time.format.DateTimeParseException => None }
 }

@@ -1,5 +1,6 @@
 package graft.vcr
 
+import graft.streaming.StreamDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,19 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object TapeDiff {
 
+  /** Per-day (n, bytes, xor) digests of the stored lines, the same
+    * fold `VcrCli digest` and the live recorder digest (R29) apply.
+    */
   private def digests(spark: SparkSession, root: String,
-                      stream: String): DataFrame = {
-    val dir = s"$root/$stream"
-    // partition inference types dt= as DATE; the digest table keys on
-    // the partition NAME, so pin it back to string
-    val lines = spark.read.option("basePath", dir).text(dir)
-      .withColumn(Tape.DtCol, col(Tape.DtCol).cast("string"))
-    lines.groupBy(col(Tape.DtCol))
-      .agg(count(lit(1)).as("n"),
-        sum(octet_length(col("value"))).as("line_bytes"),
-        expr("bit_xor(cast(conv(substring(md5(value), 1, 15), 16, 10) " +
-          "as bigint))").as("digest"))
-  }
+                      stream: String): DataFrame =
+    StreamDigest.digests(Tape.scan(spark, s"$root/$stream"), col(Tape.LineCol))
 
   /** One row per day present on either side:
     * (dt, status, n_a, n_b, digest_a, digest_b).

@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   * a replay over a corrupt file either throws mid-stream or silently
   * emits garbage payloads — fsck finds it first.
   *
-  * Execution shape: one distributed pass over the (pruned) text files
-  * — every line decodes through `try_to_binary(..., 'base64')` (null =
-  * malformed, a codegen check, no parsing on the driver) and
-  * aggregates per file; the name contract is column regex over the
-  * file path. No payload byte ever reaches the driver; verdicts are
+  * Execution shape: one distributed pass over the tape's raw lines
+  * ([[Tape.scan]]'s `line`; payloads are never decoded, and empty
+  * lines are skipped as replay skips them) — every line decodes
+  * through `try_to_binary(..., 'base64')` (null = malformed, a codegen
+  * check, no parsing on the driver) and aggregates per file; the name
+  * contract is the scan's `seq_first`/`seq_last`, parsed from the file
+  * name. No payload byte ever reaches the driver; verdicts are
   * per-file rows a maintenance job can alert on.
   *
   * Verdict precedence: `bad_name` (range unparseable or inverted — the
@@ -31,32 +33,18 @@ import org.apache.spark.sql.functions._
 object TapeFsck {
 
   def fsck(spark: SparkSession, root: String, stream: String): DataFrame = {
-    val dir = s"$root/$stream"
-    val lines = spark.read.option("basePath", dir).text(dir)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol))
-    lines
-      .withColumn("declared_first",
-        regexp_extract(col("file"), "^(\\d+)-(\\d+)(?:\\.txt)?$", 1))
-      .withColumn("declared_last",
-        regexp_extract(col("file"), "^(\\d+)-(\\d+)(?:\\.txt)?$", 2))
+    Tape.scan(spark, s"$root/$stream")
+      .select(col(Tape.LineCol), Tape.fileName.as("file"), col(Tape.DtCol),
+        col("seq_first"), col("seq_last"))
       .withColumn("bad_line",
-        when(length(col("value")) > 0 &&
-          expr("try_to_binary(value, 'base64')").isNull, 1L)
+        when(expr(s"try_to_binary(${Tape.LineCol}, 'base64')").isNull, 1L)
           .otherwise(0L))
-      .groupBy(col(Tape.DtCol), col("file"),
-        col("declared_first"), col("declared_last"))
+      .groupBy(col(Tape.DtCol), col("file"), col("seq_first"), col("seq_last"))
       .agg(count(lit(1)).as("n_lines"),
         sum(col("bad_line")).as("n_bad_lines"))
-      .withColumn("name_ok",
-        col("declared_first") =!= "" &&
-          col("declared_first").cast("long") <=
-            col("declared_last").cast("long"))
+      .withColumn("name_ok", coalesce(col("seq_first") <= col("seq_last"), lit(false)))
       .withColumn("range_width",
-        when(col("name_ok"),
-          col("declared_last").cast("long") -
-            col("declared_first").cast("long") + 1L))
+        when(col("name_ok"), col("seq_last") - col("seq_first") + 1L))
       .withColumn("status",
         when(!col("name_ok"), "bad_name")
           .when(col("n_bad_lines") > 0, "bad_lines")

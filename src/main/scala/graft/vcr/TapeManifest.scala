@@ -1,5 +1,7 @@
 package graft.vcr
 
+import graft.sources.TapeListing
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -38,8 +40,6 @@ object TapeManifest {
 
   val ManifestDir = "_manifest"
 
-  private val nameRe = "^(\\d+)-(\\d+)(?:\\.txt)?$"
-
   /** Manifest row schema. `dt` is the partition column of the stored
     * layout; declaring it explicitly keeps its type STRING (partition
     * inference would guess DATE) and keeps old unpartitioned manifests
@@ -53,44 +53,29 @@ object TapeManifest {
   private val manifestCols =
     Seq(Tape.DtCol, "file", "first_seq", "last_seq", "n_lines", "line_bytes")
 
-  /** Zone-map stats for a tape text scan: one row per file with
+  /** Zone-map stats for a tape scan: one row per file with
     * `(dt, file, first_seq, last_seq, n_lines, line_bytes)`. Files
     * whose names violate the `{first}-{last}` contract are EXCLUDED —
     * fsck (V12) owns reporting them; an index must not address what it
     * cannot bound.
     */
-  private def zoneMapStats(lines: DataFrame): DataFrame =
-    lines
-      .groupBy(col(Tape.DtCol), col("file"))
+  private def zoneMapStats(tape: DataFrame): DataFrame =
+    tape
+      .groupBy(col(Tape.DtCol), Tape.fileName.as("file"),
+        col("seq_first").as("first_seq"), col("seq_last").as("last_seq"))
       .agg(count(lit(1)).as("n_lines"),
-        // content bytes incl. the '\n' the text sink appends per line
-        sum(length(col("value")) + lit(1L)).as("line_bytes"))
-      .withColumn("first_seq", regexp_extract(col("file"), nameRe, 1))
-      .withColumn("last_seq", regexp_extract(col("file"), nameRe, 2))
-      .filter(col("first_seq") =!= "" &&
-        col("first_seq").cast("long") <= col("last_seq").cast("long"))
-      .select(col(Tape.DtCol), col("file"),
-        col("first_seq").cast("long").as("first_seq"),
-        col("last_seq").cast("long").as("last_seq"),
-        col("n_lines"), col("line_bytes"))
-
-  private def tapeLines(spark: SparkSession, dir: String,
-                        paths: Seq[String]): DataFrame =
-    spark.read.option("basePath", dir).text(paths: _*)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol))
+        // content bytes incl. the '\n' the writer appends per line
+        sum(length(col(Tape.LineCol)) + lit(1L)).as("line_bytes"))
+      .filter(col("first_seq") <= col("last_seq"))
+      .select(manifestCols.map(col): _*)
 
   /** Per-file zone maps, computed distributed over the whole tape. */
-  def build(spark: SparkSession, root: String, stream: String): DataFrame = {
-    val dir = s"$root/$stream"
-    zoneMapStats(tapeLines(spark, dir, Seq(dir)))
-  }
+  def build(spark: SparkSession, root: String, stream: String): DataFrame =
+    zoneMapStats(Tape.scan(spark, s"$root/$stream"))
 
   /** Build and persist the manifest parquet beside the day partitions
-    * (`{root}/{stream}/_manifest`; the leading underscore keeps text
-    * scans of the tape from reading it — Spark's own convention for
-    * metadata side-files). Stored PARTITIONED BY dt so that refresh
+    * (`{root}/{stream}/_manifest`; it is no `dt=` directory, so the
+    * tape listing never reads it). Stored PARTITIONED BY dt so that refresh
     * (V14) can overwrite only the days that changed.
     */
   def write(spark: SparkSession, root: String, stream: String): Unit =
@@ -213,7 +198,7 @@ object TapeManifest {
       else {
         val paths = newFiles.toSeq.map { case (dt, f) =>
           s"$dir/${Tape.DtCol}=$dt/$f" }
-        zoneMapStats(tapeLines(spark, dir, paths))
+        zoneMapStats(Tape.scanFiles(spark, dir, paths))
       }
     val addedRows = addedStats.count()
 
@@ -282,26 +267,13 @@ object TapeManifest {
   private def listTapeFiles(spark: SparkSession, dir: String,
                             scope: Option[Set[String]])
   : Set[(String, String)] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Set.empty
-    val dayDirs: Seq[(String, org.apache.hadoop.fs.Path)] = scope match {
-      case Some(dts) => dts.toSeq.sorted
-        .map(dt => (dt,
-          new org.apache.hadoop.fs.Path(root, s"${Tape.DtCol}=$dt")))
-        .filter { case (_, p) => fs.exists(p) }
-      case None => fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"${Tape.DtCol}="))
-        .map(st =>
-          (st.getPath.getName.stripPrefix(s"${Tape.DtCol}="), st.getPath))
+    val files = scope match {
+      case Some(dts) => TapeListing.listDays(fs, root, dts)
+      case None => TapeListing.list(fs, root, _ => true)
     }
-    dayDirs.flatMap { case (dt, day) =>
-      fs.listStatus(day).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
-          !st.getPath.getName.startsWith("_"))
-        .map(st => (dt, st.getPath.getName))
-    }.toSet
+    files.map(f => (f.dt, new Path(f.file).getName)).toSet
   }
 
   /** Manifest entries whose declared seq range overlaps `[from, to]`. */
@@ -322,16 +294,8 @@ object TapeManifest {
       .select(col(Tape.DtCol), col("file")).collect()
     val files = entries.map(r =>
       s"$dir/${Tape.DtCol}=${r.getString(0)}/${r.getString(1)}").toSeq
-    if (files.isEmpty)
-      return spark.range(0).select(
-        lit("").as(Tape.LineCol), lit("").as(Tape.DtCol),
-        lit("").as("src"), lit(Array.empty[Byte]).as(Tape.PayloadCol))
-    spark.read.option("basePath", dir).text(files: _*)
-      .filter(length(col("value")) > 0)
-      .select(
-        col("value").as(Tape.LineCol),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol),
-        input_file_name().as("src"),
-        Tape.decodeLine(col("value")).as(Tape.PayloadCol))
+    Tape.scanFiles(spark, dir, files)
+      .select(col(Tape.LineCol), col(Tape.DtCol), col("src"),
+        col(Tape.PayloadCol))
   }
 }

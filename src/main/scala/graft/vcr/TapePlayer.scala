@@ -1,8 +1,10 @@
 package graft.vcr
 
-import java.time.LocalDateTime
+import java.time.{LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.TapeListing
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Replay: tape → records → batched puts (reference: KinesisPlayer.java).
@@ -10,17 +12,17 @@ import org.apache.spark.sql.functions._
   * The reference lists each day folder in `[start, end)` on the driver,
   * filters objects by last-modified, splits lines, Base64-decodes, and
   * re-emits in ≤500-record / ≤1 MB PutRecords batches. Spark-first:
-  * the day loop is a partition-pruned scan of the `dt=` Hive layout
-  * (the listing is not pruned — see [[read]]), the line
-  * split/skip-empties/decode are codegen'd expressions, and batch
+  * the day loop is the tape scan's `dt` pushdown, which lists only the
+  * day directories in range ([[graft.sources.TapeScan]]), the line
+  * split/skip-empties/decode run in the scan's reader, and batch
   * assembly is a per-partition fold — per-partition batching matches the
   * reference, whose batches never span S3 objects read on different
   * threads.
   */
 object TapePlayer {
 
-  /** Tape lines for `[start, effectiveEnd(start, end)]`, partition-pruned
-    * by day (reference: KinesisPlayer.java:199-246). Columns:
+  /** Tape lines for `[start, effectiveEnd(start, end)]`, pruned by day
+    * before listing (reference: KinesisPlayer.java:199-246). Columns:
     * `line STRING, dt STRING, src STRING (file), payload BINARY`.
     * Empty lines are skipped (reference: KinesisPlayer.java:170-172).
     *
@@ -39,63 +41,22 @@ object TapePlayer {
            mtimeWindow: Boolean = false): DataFrame = {
     val endEff = TimeArg.effectiveEnd(start, end)
     val dir = s"$root/$stream"
-    val base = if (!mtimeWindow) {
-      // read.text keeps the inferred dt= partition column, so the
-      // day-range filter prunes the files the scan opens. It does not
-      // prune the listing: InMemoryFileIndex lists every dt= directory
-      // of the tape before the planner drops the days outside the
-      // range, where the reference lists only the day folders in range.
-      spark.read.option("basePath", dir).text(dir)
-        .filter(col(Tape.DtCol) >= lit(start.toLocalDate.toString) &&
-          col(Tape.DtCol) <= lit(endEff.toLocalDate.toString))
-    } else {
+    val (from, to) = TimeArg.days(start, end)
+    val tape = if (!mtimeWindow) Tape.scan(spark, dir) else {
       // Strict reference parity (KinesisPlayer.java:203-215): objects
-      // with mtime second STRICTLY inside (start, end). The listing is
-      // one metadata pass over the pruned day dirs, like Estimator.
-      val files = mtimeWindowFiles(spark, dir, start, endEff)
-      if (files.isEmpty)
-        return spark.emptyDataFrame.select(
-          lit("").as(Tape.LineCol), lit("").as(Tape.DtCol),
-          lit("").as("src"), lit(Array.empty[Byte]).as(Tape.PayloadCol))
-          .limit(0)
-      spark.read.option("basePath", dir).text(files: _*)
+      // with mtime second STRICTLY inside (start, end), read by name.
+      val startSec = start.toEpochSecond(ZoneOffset.UTC)
+      val endSec = endEff.toEpochSecond(ZoneOffset.UTC)
+      val path = new Path(dir)
+      val files = TapeListing.list(
+          path.getFileSystem(spark.sparkContext.hadoopConfiguration), path,
+          dt => dt >= from && dt <= to)
+        .filter(f => f.mtime / 1000L > startSec && f.mtime / 1000L < endSec)
+      Tape.scanFiles(spark, dir, files.map(_.file))
     }
-    base
-      .filter(length(col("value")) > 0)
-      .select(
-        col("value").as(Tape.LineCol),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol),
-        input_file_name().as("src"),
-        Tape.decodeLine(col("value")).as(Tape.PayloadCol))
-  }
-
-  /** Files in the pruned day dirs whose mtime is strictly inside
-    * `(start, end)` at epoch-second granularity, like the reference's
-    * object filter.
-    */
-  private def mtimeWindowFiles(spark: SparkSession, dir: String,
-                               start: LocalDateTime,
-                               endEff: LocalDateTime): Seq[String] = {
-    import java.time.ZoneOffset
-    val startSec = start.toEpochSecond(ZoneOffset.UTC)
-    val endSec = endEff.toEpochSecond(ZoneOffset.UTC)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
-    var d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new org.apache.hadoop.fs.Path(root, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        fs.listStatus(dayDir).foreach { st =>
-          val mtimeSec = st.getModificationTime / 1000L
-          if (st.isFile && !st.getPath.getName.startsWith(".") &&
-            mtimeSec > startSec && mtimeSec < endSec)
-            out += st.getPath.toString
-        }
-      }
-      d = d.plusDays(1)
-    }
-    out.result()
+    tape.filter(col(Tape.DtCol) >= lit(from) && col(Tape.DtCol) <= lit(to))
+      .select(col(Tape.LineCol), col(Tape.DtCol), col("src"),
+        col(Tape.PayloadCol))
   }
 
   /** Decoded payloads only (reference: objectToPayloads). */

@@ -1,5 +1,6 @@
 package graft.vcr
 
+import graft.sources.TapeListing
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -28,10 +29,11 @@ object TapeWriter {
     * tape under `root/stream/`. Returns the number of files on the tape
     * (0 for a `SaveMode.Ignore` skip).
     *
-    * The returned count costs one `dt=*／*` metadata glob over the WHOLE
-    * tape — fine for a batch CLI verb, wrong per streaming trigger (an
-    * O(archive) LIST on a hot path, the same class as the unscoped V14
-    * walk), which is why the recorder calls [[append]] instead.
+    * The returned count costs one metadata walk over the WHOLE tape
+    * ([[TapeListing]]) — fine for a batch CLI verb, wrong per streaming
+    * trigger (an O(archive) LIST on a hot path, the same class as the
+    * unscoped V14 walk), which is why the recorder calls [[append]]
+    * instead.
     *
     * @param numFiles target parallelism (≅ number of flushed buffers);
     *                 pick so each file ≈ the reference's 100 MiB buffer.
@@ -53,9 +55,8 @@ object TapeWriter {
     }
     append(records.repartitionByRange(n, Tape.dtOf(col(Tape.TsCol)),
       col(Tape.SeqCol)), dir)
-    // one metadata glob for the return value; the write itself is done
-    fs.globStatus(new Path(path, s"${Tape.DtCol}=*/*")).count(st =>
-      st.isFile && !st.getPath.getName.startsWith("."))
+    // one metadata walk for the return value; the write itself is done
+    TapeListing.list(fs, path, _ => true).size
   }
 
   /** Appends `records` to the tape at `dir` as they are partitioned:

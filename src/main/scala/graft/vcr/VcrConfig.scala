@@ -89,4 +89,8 @@ object TimeArg {
     }
     end.getOrElse(start.plusDays(1).minusSeconds(1))
   }
+
+  /** The `dt` days, first and last, that `[start, effectiveEnd]` spans. */
+  def days(start: LocalDateTime, end: Option[LocalDateTime]): (String, String) =
+    (start.toLocalDate.toString, effectiveEnd(start, end).toLocalDate.toString)
 }
