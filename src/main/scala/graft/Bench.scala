@@ -3,16 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions("graft-bench", cpus)
     // SPARK_GRAFT_BENCH_ONLY: comma list of query names — isolated
     // re-measurement under the EXACT bench protocol (warm-ups, median
     // of 3, same session config) for regression adjudication; absent →
@@ -139,7 +131,7 @@ object Bench {
     // a _c${cpus} suffix.
     val artifact =
       if (benchOnly.isDefined) "bench_isolated.json"
-      else if (cpus.trim.toIntOption.contains(32)) "bench_full.json"
+      else if (cpus == 32) "bench_full.json"
       else s"bench_full_c$cpus.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact),
       s"""{"total_sec":$total,"sf":"$sfDir","cpus":$cpus,""" +

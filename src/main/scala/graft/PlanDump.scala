@@ -1,15 +1,20 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-/** Round-14 deliverable tool: dump `.explain("formatted")` for named
-  * gate queries to files, plus the EXECUTED job/stage/task counts of
-  * one run. The formatted plan evidences scan pruning / join strategy
-  * / exchange placement for single-query claims; the counts evidence
-  * the iterative-loop claims (per-round exchange elision shows up as
-  * a lower total stage count), which the final frame's plan cannot
-  * show because checkpointed rounds collapse to LogicalRDD scans.
+/** The dev plan tool: for each named gate query, write to one file
+  * `.explain("formatted")` of the pre-AQE plan, the EXECUTED
+  * job/stage/task counts and wall time of one noop run, and the
+  * AQE-final executed plan of that run with the dataSize of every
+  * BroadcastExchange in it (`tools.ScaleProbe.broadcastSizes`). The
+  * formatted plan evidences scan pruning / join strategy / exchange
+  * placement for single-query claims; the counts evidence the
+  * iterative-loop claims (per-round exchange elision shows up as a
+  * lower total stage count), which the final frame's plan cannot show
+  * because checkpointed rounds collapse to LogicalRDD scans; the final
+  * plan and broadcast sizes adjudicate a probe-flagged broadcast.
   *
   * {{{ sbt "runMain graft.PlanDump sf0.1 plans/r14 _after dedup_pagerank ..." }}}
   */
@@ -20,16 +25,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions("graft-plandump")
     val jobs = new AtomicLong(0)
     val stages = new AtomicLong(0)
     val tasks = new AtomicLong(0)
@@ -41,11 +37,18 @@ object PlanDump {
         tasks.addAndGet(s.stageInfo.numTasks.toLong)
       }
     })
+    // the noop write's own execution: its plan holds the AQE-final tree
+    val lastRun = new AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        lastRun.set(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    })
     names.foreach { name =>
-      jobs.set(0); stages.set(0); tasks.set(0)
+      jobs.set(0); stages.set(0); tasks.set(0); lastRun.set(null)
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -56,14 +59,17 @@ object PlanDump {
       // counts include the query-BUILD phase's jobs (training collects,
       // checkpointed rounds) — that is the point: loop-shape changes
       // move these numbers even when the final frame's plan is stable.
-      // The dumped plan is the PRE-EXECUTION (pre-AQE) formatted plan
-      // of the gate frame; the counts are from the separately-executed
-      // noop write (r14 ADVICE — stated so the artifact is read right).
       val hdr = f"query: $name%s\nexecuted: jobs=${jobs.get}%d " +
         f"stages=${stages.get}%d tasks=${tasks.get}%d " +
         f"noop_first_run_sec=$sec%.3f\nplan: pre-AQE (initial physical plan)\n\n"
+      val finalPlan = Option(lastRun.get).map(_.executedPlan)
+      val tail = finalPlan.fold("\nfinal plan: not captured\n") { p =>
+        val sizes = graft.tools.ScaleProbe.broadcastSizes(p)
+        s"\nfinal plan: AQE-final (the noop run's executed plan)\n" +
+          s"broadcasts: n=${sizes.size} sizes=${sizes.sorted.reverse}\n\n$p"
+      }
       java.nio.file.Files.writeString(
-        outDir.resolve(s"$name$suffix.txt"), hdr + plan)
+        outDir.resolve(s"$name$suffix.txt"), hdr + plan + tail)
       graft.CachedFrames.releaseAll()
       println(s"dumped $name ($suffix): jobs=${jobs.get} stages=${stages.get}")
     }

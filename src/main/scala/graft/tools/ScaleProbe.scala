@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * where `suites` is a comma list of dedup,sim,text,analytics,
   * pipeline,media,vcr (default dedup,sim — the round-4 scope; the
   * rest added round 8 so every query family has its own measured 10×
-  * point; analytics/vcr need the ScaleUp `tpch`/`core` tables).
+  * point; analytics/vcr need the ScaleUp `tpch`/`core` tables). The
+  * session is `graft.Sessions`' (`SPARK_GRAFT_CPUS`; the 32-core
+  * protocol sets 32).
   */
 object ScaleProbe {
 
@@ -50,16 +52,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "SCALE_sf1.json"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleprobe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions("graft-scaleprobe")
 
     val suites = (if (args.length > 2) args(2) else "dedup,sim")
       .split(",").map(_.trim).toSet

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.ScaleUp <srcSfDir> <outDir> [factor] [which]
   * where `which` is all|core|tpch (core = documents/embeddings/events/
-  * customer; tpch = the analytics fact/dim tables, round 8).
+  * customer; tpch = the analytics fact/dim tables, round 8). The session
+  * is `graft.Sessions`' (`SPARK_GRAFT_CPUS`).
   */
 object ScaleUp {
 
@@ -161,14 +162,7 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions("graft-scaleup")
     val which = if (args.length > 3) args(3) else "all"
     if (which == "all" || which == "core")
       replicate(spark, src, out, factor)

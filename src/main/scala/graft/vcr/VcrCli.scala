@@ -27,16 +27,7 @@ object VcrCli {
   def main(args: Array[String]): Unit = {
     val config = VcrConfig.fromEnv(sys.env)
     config.validate()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-vcr")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions("graft-vcr")
     try run(spark, config, args)
     finally spark.stop()
   }

@@ -12,17 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *   reference does.
   */
 class DriverContractSpec extends AnyFunSuite {
-  // deliberately NO nanosAsLong here — a vanilla driver session
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  // deliberately nanosAsLong off — a vanilla driver session. A session
+  // built over the shared context inherits the context's settings, so
+  // the flag is switched off here, not just left out.
+  lazy val spark: SparkSession = SharedSpark.own(SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "false"))
 
   test("entry() returns rows in a vanilla session (no legacy flags)") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions — the 100 TB story in executable
@@ -8,19 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-stage codegen on a hot path, these fail before any benchmark
   * notices.
   */
-class PlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
+  /** The broadcast guards read plans at Spark's default size threshold:
+    * a threshold leaked in from another spec (-1 turns size-based
+    * broadcast off) would let every "no broadcast" guard pass vacuously. */
+  private def plan(name: String): String = {
+    val threshold = SQLConf.AUTO_BROADCASTJOIN_THRESHOLD
+    assert(JavaUtils.byteStringAsBytes(spark.conf.get(threshold.key)) ===
+      threshold.defaultValue.get)
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString()
+  }
 
   test("scan pushdown: filters and pruned schema reach the parquet scan") {
     val p = plan("q_scan_pushdown")

@@ -1,17 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.01"
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * false negatives ever, and a false-positive rate near the textbook
   * estimate at the configured load.
   */
-class BloomFilterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BloomFilterSpec extends AnyFunSuite with SharedSpark {
   private val M = 1 << 12 // small m so FPs actually occur
   private val K = 4
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical under any partitioning (merge = elementwise add), and
   * the JVM hash matches the SQL family.
   */
-class CountMinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CountMinSpec extends AnyFunSuite with SharedSpark {
   private val D = 4
   private val W = 64 // small width so collisions actually occur
 

@@ -1,19 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-class MisraGriesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MisraGriesSpec extends AnyFunSuite with SharedSpark {
   /** The MG guarantees, under arbitrary merge trees: every item with
     * freq > n/(k+1) survives, no kept count exceeds the true count,
     * and the summary never exceeds k entries. Deterministic seed;

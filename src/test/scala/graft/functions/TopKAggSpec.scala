@@ -1,18 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TopKAggSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TopKAggSpec extends AnyFunSuite with SharedSpark {
   test("TopKAgg equals the window top-k on large multi-partition groups") {
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
       .select(col("l_returnflag").as("g"),

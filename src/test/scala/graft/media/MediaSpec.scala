@@ -1,17 +1,9 @@
 package graft.media
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class MediaSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MediaSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.01"
 
   test("decode pipeline: typed boundary, deterministic stub features") {

@@ -1,19 +1,11 @@
 package graft.operators
 
+import graft.SharedSpark
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class AsOfJoinPlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AsOfJoinPlanSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.001"
 
   private def events = Tables.events(spark, dir)

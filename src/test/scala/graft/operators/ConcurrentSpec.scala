@@ -1,18 +1,12 @@
 package graft.operators
 
+import graft.SharedSpark
 import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
-class ConcurrentSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ConcurrentSpec extends AnyFunSuite with SharedSpark {
   test("results come back in input order") {
     val sc = spark.sparkContext
     val got = Concurrent.par((1 to 6).map { i => () =>

@@ -1,16 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class ConnectedComponentsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {

@@ -1,18 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class RangeJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RangeJoinSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
   test("bucketed range join equals the naive range join on real data") {

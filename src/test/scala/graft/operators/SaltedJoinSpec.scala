@@ -1,18 +1,17 @@
 package graft.operators
 
+import graft.SharedSpark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SaltedJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SaltedJoinSpec extends AnyFunSuite with SharedSpark {
+  // shuffled joins over 8 fixed partitions: a session of its own, so
+  // none of these settings reach the specs that run after this one
+  override lazy val spark: SparkSession = SharedSpark.newSession(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false")
 
   import spark.implicits._
 

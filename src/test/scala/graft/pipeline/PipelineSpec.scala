@@ -1,18 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PipelineSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PipelineSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.01"
 
   test("data_split partitions every doc exactly once, ~80/10/10") {

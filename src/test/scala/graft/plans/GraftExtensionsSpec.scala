@@ -1,24 +1,15 @@
 package graft.plans
 
+import graft.SharedSpark
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
-  // getOrCreate() would silently reuse another suite's session and skip
-  // withExtensions; clear first (suites run sequentially in the forked
-  // JVM, the SparkContext itself is reused).
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  }
+  // extensions are fixed when a session is built: build one over the
+  // shared context (getOrCreate() would hand back the shared session
+  // without them), leaving the shared one default and active
+  lazy val spark: SparkSession = SharedSpark.own(
+    SparkSession.builder().withExtensions(new GraftExtensions))
 
   test("graft_dot is callable from SQL and agrees with the fold") {
     val got = spark.sql("""

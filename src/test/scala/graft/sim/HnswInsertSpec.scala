@@ -2,8 +2,9 @@ package graft.sim
 
 import java.nio.file.Files
 
+import graft.SharedSpark
 import graft.functions.VectorFunctions.normalize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * degree bound, keep every inserted node attached, and serve with
   * recall against brute force over the GROWN corpus.
   */
-class HnswInsertSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HnswInsertSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.001"
 
   private def allVecs: DataFrame =

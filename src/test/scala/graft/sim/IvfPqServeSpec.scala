@@ -1,8 +1,9 @@
 package graft.sim
 
+import graft.SharedSpark
 import graft.functions.VectorFunctions.{dot, dotSeq, normalize, roundHalfUp}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -14,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * those expressions), that a batch runs few Spark jobs and no parquet
   * schema inference, and that the driver rounding twin is Spark's.
   */
-class IvfPqServeSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IvfPqServeSpec extends AnyFunSuite with SharedSpark with BeforeAndAfterAll {
   private lazy val tmp =
     java.nio.file.Files.createTempDirectory("graft-ivfpq-serve").toString
 

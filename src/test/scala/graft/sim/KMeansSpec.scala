@@ -1,19 +1,11 @@
 package graft.sim
 
+import graft.SharedSpark
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class KMeansSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KMeansSpec extends AnyFunSuite with SharedSpark {
   private def vecs = Tables.embeddings(spark, "/root/testdata/sf0.01")
     .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
       col("label"))

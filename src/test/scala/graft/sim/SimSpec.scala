@@ -1,17 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SimSpec extends AnyFunSuite with SharedSpark {
   private val dir = "/root/testdata/sf0.01"
 
   private def topn(df: org.apache.spark.sql.DataFrame, n: Int = 1) =
@@ -2365,9 +2357,7 @@ class SimSpec extends AnyFunSuite {
     // plan could only come from a hint — the exact regression this
     // guards against. (The beam-search FRONTIER broadcast is a
     // different, kilobyte-sized frame and lives in the serving plan.)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
@@ -2381,7 +2371,7 @@ class SimSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString()
       assert(!p.contains("BroadcastExchange"), p)
       assert(!p.contains("BroadcastHashJoin"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("IVF-PQ refine cascade: candidates stay in the query's list, " +

@@ -3,26 +3,19 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.SharedSpark
 import graft.vcr.{Tape, TapeWriter}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class TapeCatalogSpec extends AnyFunSuite {
+class TapeCatalogSpec extends AnyFunSuite with SharedSpark {
   private val root = Files.createTempDirectory("graft-cat").toString
 
-  // catalog conf must be present at session creation
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.tapes", classOf[TapeCatalog].getName)
-      .config("spark.sql.catalog.tapes.root", root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  // the catalog loads once into the session that first names it: a
+  // session of its own keeps `tapes` out of the shared one
+  override lazy val spark: SparkSession = SharedSpark.newSession(
+    "spark.sql.catalog.tapes" -> classOf[TapeCatalog].getName,
+    "spark.sql.catalog.tapes.root" -> root)
 
   private def writeStream(name: String, n: Int): Unit = {
     import spark.implicits._

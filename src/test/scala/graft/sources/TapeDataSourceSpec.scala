@@ -3,19 +3,12 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.SharedSpark
 import graft.vcr.{Tape, TapeWriter}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TapeDataSourceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TapeDataSourceSpec extends AnyFunSuite with SharedSpark {
   private def writeTape(): String = {
     val root = Files.createTempDirectory("graft-dsv2").toString
     import spark.implicits._

@@ -3,19 +3,12 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.SharedSpark
 import graft.vcr.Tape
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TapeStreamSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TapeStreamSpec extends AnyFunSuite with SharedSpark {
   private def records(from: Int, to: Int, day: Int) = {
     import spark.implicits._
     (from to to).map { i =>

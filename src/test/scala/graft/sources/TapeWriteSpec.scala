@@ -4,19 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import graft.SharedSpark
 import graft.vcr.{Tape, TapePlayer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TapeWriteSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TapeWriteSpec extends AnyFunSuite with SharedSpark {
   private def records(n: Int) = {
     import spark.implicits._
     (1 to n).map { i =>

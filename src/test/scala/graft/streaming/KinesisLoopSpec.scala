@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import graft.SharedSpark
 import graft.vcr._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Kinesis loop, closed end to end: records put into a
@@ -16,15 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * byte-identical payloads, deterministic keys, and injected
   * throttling exercising the backoff-retry path in BOTH directions.
   */
-class KinesisLoopSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KinesisLoopSpec extends AnyFunSuite with SharedSpark {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-kloop").toString
 

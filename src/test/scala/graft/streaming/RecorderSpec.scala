@@ -9,10 +9,10 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import graft.SharedSpark
 import graft.vcr._
 import org.apache.spark.graft.SparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,15 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shard's records in seq order — and `VcrCli record` reports every
   * trigger as a JSON line.
   */
-class RecorderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RecorderSpec extends AnyFunSuite with SharedSpark {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-recorder").toString
 

@@ -3,21 +3,13 @@ package graft.streaming
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import graft.SharedSpark
 import graft.Tables
 import graft.vcr.{Tape, TapePlayer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingSpec extends AnyFunSuite with SharedSpark {
   private def tmp(): String = Files.createTempDirectory("graft-stream").toString
 
   /** events as a file stream: copy the parquet into its own source dir. */

@@ -1,10 +1,10 @@
 package graft.vcr
 
+import graft.SharedSpark
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Kinesis-shaped connector seam, exercised end to end: a tape
@@ -14,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exhausted retries failing the job, open-shard-only DescribeStream
   * counting feeding the estimator.
   */
-class KinesisSinkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KinesisSinkSpec extends AnyFunSuite with SharedSpark {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-kinesis").toString
 

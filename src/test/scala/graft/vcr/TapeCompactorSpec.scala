@@ -1,20 +1,13 @@
 package graft.vcr
 
+import graft.SharedSpark
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class TapeCompactorSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TapeCompactorSpec extends AnyFunSuite with SharedSpark {
   test("compaction merges small files, preserves content and naming") {
     val root = Files.createTempDirectory("graft-compact").toString
     import spark.implicits._

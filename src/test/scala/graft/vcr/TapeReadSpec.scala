@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import graft.SharedSpark
 import graft.streaming.StreamDigest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads the tape through one listing and one reader, so they agree on
   * which files are tape data and which lines are records.
   */
-class TapeReadSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TapeReadSpec extends AnyFunSuite with SharedSpark {
   private val day = LocalDateTime.parse("2024-01-01T00:00:00")
 
   private def records(n: Int, days: Int = 1): DataFrame = {

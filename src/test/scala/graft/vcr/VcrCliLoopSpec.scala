@@ -1,10 +1,10 @@
 package graft.vcr
 
+import graft.SharedSpark
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The CLI surface end to end against the Kinesis-shaped endpoint —
@@ -14,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * discovers the target's open shard count via DescribeStream. All
   * three selected by VCR_ENDPOINT-style config, no code changes.
   */
-class VcrCliLoopSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VcrCliLoopSpec extends AnyFunSuite with SharedSpark {
   private def captured(body: => Unit): String = {
     val buf = new ByteArrayOutputStream()
     Console.withOut(new PrintStream(buf, true, "UTF-8"))(body)

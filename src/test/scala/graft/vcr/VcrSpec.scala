@@ -1,22 +1,14 @@
 package graft.vcr
 
+import graft.SharedSpark
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class VcrSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VcrSpec extends AnyFunSuite with SharedSpark {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-vcr").toString
 
