@@ -983,10 +983,10 @@ object DedupQueries {
   private[dedup] def keeperOn(edges0: DataFrame): DataFrame = {
     val edges = graft.CachedFrames.persist(edges0)
     // round-14 (guide §2.6): CC and PageRank are INDEPENDENT given the
-    // edge frame, but ran strictly in sequence — CC's per-round sig()
-    // actions first, then PR's ten checkpointed rounds at the final
-    // action. Force the shared edge cache once, then run both label
-    // passes from a driver pool; the PR branch counts its result so
+    // edge frame, but ran strictly in sequence — CC's per-round
+    // star-forest checks first, then PR's ten checkpointed rounds at
+    // the final action. Force the shared edge cache once, then run both
+    // label passes from a driver pool; the PR branch counts its result so
     // its round chain materializes inside the overlap (the final
     // re-read serves from the checkpointed rounds).
     edges.count()
@@ -1640,8 +1640,11 @@ object DedupQueries {
     * oracle computes the same components by recursive transitive
     * closure, so the gate checks the clustering end to end.
     */
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val edges = jaccardPairs(shingles(Tables.documents(s, dir)))
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    clustersOn(Tables.documents(s, dir))
+
+  private def clustersOn(docs: DataFrame): DataFrame = {
+    val edges = jaccardPairs(shingles(docs))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
     // Loop parallelism tracks the DUP GRAPH, not the corpus: every
@@ -1687,9 +1690,12 @@ object DedupQueries {
     * hash-checked as one unit rather than per stage.
     */
   def dedupPurgePlan(s: SparkSession, dir: String): DataFrame = {
-    val clusters = dedupClusters(s, dir)
+    // one read of the corpus: each read infers the parquet schema
+    // with a Spark job of its own
+    val docs = Tables.documents(s, dir)
+    val clusters = clustersOn(docs)
       .select(col("doc_id"), col("canonical"), col("cluster_size"))
-    Tables.documents(s, dir).select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(clusters, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("canonical"), col("doc_id")).as("keeper_id"),
@@ -2248,11 +2254,11 @@ object DedupQueries {
     * token memo applied to the T29 encode feeding the token-grain
     * dedup/decontam rungs: the BPE tokenization is offline input
     * prep (priced by its own gates), and a per-invocation rebuild
-    * carries FRESH checkpoint lineage through `bpeTrain`, so no
-    * downstream cache ever matches — a "warm" run re-trained the
-    * tokenizer from scratch while the cold run's caches still held
-    * memory (the sf1 warm>cold spill, r13 verdict item 3, second
-    * half). The checkpoint pins the lineage once; every later
+    * re-trains the tokenizer under a fresh lineage, so no downstream
+    * cache ever matches — a "warm" run re-trained the tokenizer from
+    * scratch while the cold run's caches still held memory (the sf1
+    * warm>cold spill, r13 verdict item 3, second half). The
+    * checkpoint pins the lineage once; every later
     * invocation plans against the SAME frame and the df-capped
     * survivor cache finally hits.
     */

@@ -119,10 +119,11 @@ object CurationWriter {
     * block_id into `nFiles` files, block-sorted within each — a rank
     * reading blocks [a, b) touches the minimal file set (the
     * dt-pruning discipline applied to the training axis). Idempotent
-    * overwrite. Returns (blocks written, tokens written).
+    * overwrite. Nothing is read back: the deploy step folds its
+    * manifest from the written (block_id, n_tokens, token_md5) columns.
     */
   def writeBlocks(s: SparkSession, dir: String, outDir: String,
-                  nFiles: Int = 4): (Long, Long) = {
+                  nFiles: Int = 4): Unit = {
     val stream = PipelineQueries.packedTokenStream(s, dir)
     val blocks = stream.groupBy(col("block_id"))
       .agg(count(lit(1)).as("n_tokens"),
@@ -136,8 +137,5 @@ object CurationWriter {
       .repartitionByRange(nFiles, col("block_id"))
       .sortWithinPartitions(col("block_id"))
     blocks.write.mode("overwrite").parquet(outDir)
-    val back = s.read.parquet(outDir)
-    (back.count(),
-      back.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0))
   }
 }

@@ -571,13 +571,13 @@ object PipelineQueries {
   val ShardChunk = 64L
 
   def dataShardManifest(s: SparkSession, dir: String): DataFrame = {
-    // ONE pack pass feeds both the order and the sizes (persisted —
-    // without this the epoch order and the size join each re-derive
-    // the packed table, re-training the tokenizer twice per call)
+    // the packed table is persisted: the epoch order and the size join
+    // both read it, so the corpus packs once per call. (The deploy step
+    // folds the same manifest from the blocks it wrote instead.)
     val packed = graft.CachedFrames.persist(dataPackTokens(s, dir)
       .select(col("block_id"), col("n_tokens"), col("token_md5")))
     val ord = epochOrderOn(packed.select(col("block_id")))
-    shardManifestOn(ord, packed)
+    shardManifestOn(ord, packed).orderBy(col("epoch"), col("worker"))
   }
 
   /** The P36 manifest fold over an explicit (epoch, position,
@@ -620,7 +620,6 @@ object PipelineQueries {
         md5(concat_ws("-", expr(
           "transform(sort_array(collect_list(struct(chunk, chunk_tok_md5))), " +
             "p -> p.chunk_tok_md5)"))).as("tokens_md5"))
-      .orderBy(col("epoch"), col("worker"))
   }
 
   lazy val dataShardManifestSql: String = s"""

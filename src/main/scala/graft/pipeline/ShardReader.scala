@@ -136,12 +136,19 @@ object ShardReader {
   /** Deploy the loader handoff: the P37 block artifact under
     * `outDir/blocks`, the P36 shard manifest under
     * `outDir/manifest`, and the pinned layout parameters under
-    * `outDir/_params` (P42) — what a training job ships.
+    * `outDir/_params` (P42) — what a training job ships. The corpus is
+    * packed once: the manifest folds from the three digest columns of
+    * the blocks just written, with the arithmetic [[readShard]]
+    * verifies with, so it equals the `data_shard_manifest` gate.
     */
   def deploy(s: SparkSession, dir: String, outDir: String,
              nFiles: Int = 4): Unit = {
     CurationWriter.writeBlocks(s, dir, s"$outDir/blocks", nFiles)
-    PipelineQueries.dataShardManifest(s, dir)
+    // the written schema, given: no job infers it from the footers
+    val sizes = s.read.schema("block_id BIGINT, n_tokens BIGINT, " +
+      "token_md5 STRING").parquet(s"$outDir/blocks")
+    PipelineQueries.shardManifestOn(
+      PipelineQueries.epochOrderOn(sizes.select(col("block_id"))), sizes)
       .write.mode("overwrite").parquet(s"$outDir/manifest")
     writeParams(s, outDir, LoaderParams(PipelineQueries.LoaderWorkers,
       PipelineQueries.PackEpochs, PipelineQueries.PackBlock,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** R24: BPE token accounting AT INGEST — T17's encoder run
   * continuously over arriving documents against a tokenizer trained
   * OFFLINE (T16). The deployment shape is the frozen-tokenizer one:
-  * training produces the post-merge vocabulary as a dimension table
-  * (word → subword token count), and the ingest path is one
+  * training produces a dimension table (word → subword token count,
+  * [[graft.text.TextQueries.bpeTokenCounts]]), and the ingest path is one
   * STREAM-STATIC left join of the arriving word stream against it
   * plus an UPDATE-mode per-doc aggregate (each document explodes
   * inside its own trigger, so its total is final on arrival — the R23
@@ -22,16 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object StreamBpeTokens {
 
-  /** The trained tokenizer as a dimension table: (word, n_toks) from
-    * T16's post-merge vocabulary frame.
-    */
-  def tokenTable(vocabR: DataFrame): DataFrame =
-    vocabR.select(col("word"),
-      size(filter(split(col("wstr"), graft.text.TextQueries.BpeSep),
-        s0 => length(s0) > lit(0))).cast("long").as("n_toks"))
-
-  /** Score a streaming (doc_id, text) frame: one row per arriving doc
-    * with (n_words, n_bpe_tokens, n_oov).
+  /** Score a streaming (doc_id, text) frame against the (word, n_toks)
+    * table: one row per arriving doc with (n_words, n_bpe_tokens,
+    * n_oov).
     */
   def encode(toks: DataFrame)(docs: DataFrame): DataFrame =
     docs

@@ -1214,87 +1214,11 @@ object TextQueries {
     */
   val BpeRounds = 8
 
-  /** Symbol separator / end-of-word marker for the delimited symbol
-    * string. Control characters that cannot occur in whitespace-split
-    * corpus words, so the separator anchors symbol boundaries exactly
-    * (`ends_with(acc, SEP || l)` ⟺ the last symbol is literally `l`).
+  /** End-of-word marker, each word's last symbol: a control character
+    * that cannot occur in whitespace-split corpus words, so no merge
+    * crosses a word boundary and a decoder can split on it.
     */
-  val BpeSep = "\u001f"
   val BpeMark = "\u0004"
-
-  /** Greedy left-to-right non-overlapping merge of pair (l, r) applied
-    * to a `wstr` delimited symbol string, as ONE string fold shared
-    * bit-for-bit with the oracle's `list_reduce`: walk the symbols,
-    * and when the accumulator's last symbol is exactly `l` and the
-    * next is `r`, append just `r`'s text (a merged symbol IS the
-    * concatenation l||r, so no delimiter is added and the merged
-    * symbol can't re-match `l` — which is precisely the
-    * non-overlapping rule: "a a a" under (a,a) → "aa a").
-    */
-  private def bpeMergeCol(l: String, r: String) = {
-    val syms = filter(split(col("wstr"), BpeSep),
-      s0 => length(s0) > lit(0))
-    aggregate(
-      transform(syms, s0 => concat(lit(BpeSep), s0)),
-      lit(""),
-      (acc, e) => when(acc.endsWith(lit(BpeSep + l)) &&
-          e === lit(BpeSep + r), concat(acc, lit(r)))
-        .otherwise(concat(acc, e)))
-  }
-
-  /** The BPE trainer over an explicit (word, wc) vocabulary: the
-    * learned merge table plus the POST-MERGE vocabulary (word, wc,
-    * wstr) — the trained tokenizer as data, which T17 joins against
-    * the corpus to encode it. Exposed for TextSpec, which checks the
-    * whole merge sequence against an independent in-memory reference
-    * implementation on planted vocabularies.
-    */
-  private[graft] def bpeTrain(vocab0: DataFrame, rounds: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var vocab = vocab0.withColumn("wstr", concat(lit(BpeSep),
-        array_join(expr(
-          "transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
-          BpeSep),
-        lit(BpeSep + BpeMark)))
-      .select(col("word"), col("wc"), col("wstr"))
-      .localCheckpoint(false)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var k = 1
-    var done = false
-    while (k <= rounds && !done) {
-      val best = vocab
-        .select(col("wc"), filter(split(col("wstr"), BpeSep),
-          s0 => length(s0) > lit(0)).as("syms"))
-        // a fully-merged word (one symbol left) contributes no pairs;
-        // without this guard sequence(1, 0) DESCENDS and element_at
-        // walks off the array (DuckDB's range(1, 1) is just empty)
-        .filter(size(col("syms")) >= 2)
-        .select(col("wc"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> " +
-            "struct(element_at(syms, i) as l, element_at(syms, i+1) as r))"))
-          .as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("wc")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((k, l, r, cnt))
-        // localCheckpoint per round: §8a — the fold expression nests
-        // otherwise and the logical plan grows per round
-        vocab = vocab.withColumn("wstr", bpeMergeCol(l, r))
-          .localCheckpoint(false)
-        k += 1
-      }
-    }
-    (merges.result(), vocab)
-  }
-
-  private[text] def bpeMerges(vocab0: DataFrame,
-                              rounds: Int): Seq[(Int, String, String, Long)] =
-    bpeTrain(vocab0, rounds)._1
 
   /** Production merge depth for the T16d deep gates (a real
     * tokenizer's vocabulary budget, vs the 8 oracle-restated rounds)
@@ -1304,38 +1228,42 @@ object TextQueries {
   val BpeDeepRounds = 32768
   val BpeCkptEvery = 512
 
-  /** T16d trainer: EXACT BPE to production depth, trained driver-side
-    * over the collected word-frequency table with incremental
-    * pair-count maintenance (the classic trainer: a lazy-invalidation
-    * max-heap over pair counts; a merge re-tokenizes only the words
-    * containing its pair and refreshes only the counts it touched).
+  /** The BPE trainer, EXACT to any depth, on the driver over the
+    * collected word-frequency table with incremental pair-count
+    * maintenance (the classic trainer: a lazy-invalidation max-heap over
+    * pair counts; a merge re-tokenizes only the words containing its
+    * pair and refreshes only the counts it touched). Every BPE face
+    * trains here: T16/T17/T27/T29/T30 at the oracle depth `BpeRounds`,
+    * the T16d gates at `BpeDeepRounds`.
     *
     * WHY driver-side, in a repo that bans driver loops: BPE training
     * state is the VOCABULARY — distinct words + counts — never the
-    * corpus, and the distributed T16 already carries exactly that
-    * frame through every round (localCheckpointed per merge). At 32k
-    * merges the per-round Spark job (pair-count shuffle + 1-row
-    * collect) costs ~32k scheduler round trips for state that fits in
-    * tens of MB; every production trainer (subword-nmt, HF tokenizers)
-    * collects the word table and trains in memory for this reason.
-    * The ONE corpus-scale pass stays distributed (the word count that
-    * builds `vocab`); the trained table returns as a broadcast
-    * dimension frame. Semantics are merge-for-merge identical to
-    * [[bpeTrain]] / the DuckDB chain — same greedy non-overlapping
-    * left-to-right merge, same (cnt DESC, l, r) argmax tie-break —
-    * pinned three ways: the deep gate's first `BpeRounds` rows
-    * hash-check against the ORACLE's chain, TextSpec replays the full
-    * deep trajectory against the independent reference trainer on the
-    * real corpus vocabulary, and the fuzz vocabularies run at depth.
+    * corpus. A distributed round (pair-count shuffle, 1-row argmax
+    * collect, checkpoint of the re-merged vocabulary) costs several
+    * Spark jobs per merge for state that fits in tens of MB; every
+    * production trainer (subword-nmt, HF tokenizers) collects the word
+    * table and trains in memory for this reason. The ONE corpus-scale
+    * pass stays distributed (the word count that builds `vocab`); the
+    * trained tokenizer returns as a dimension frame.
     *
-    * Returns (merge table, word → post-merge token count).
+    * Semantics are the oracle chain's: a word starts as its code points
+    * (what Spark's `substring`/`length` count — not UTF-16 units) plus
+    * `BpeMark`; each round merges the argmax pair greedily, left to
+    * right, non-overlapping; the argmax breaks count ties by (l, r) in
+    * [[Utf8Order]], the order of SQL `ORDER BY` on strings. Pinned three
+    * ways: the gates' merge tables hash-check against the ORACLE's
+    * chain, TextSpec replays the full deep trajectory against the
+    * independent reference trainer on the real corpus vocabulary, and
+    * the fuzz vocabularies run at depth.
+    *
+    * Returns (merge table, word → post-merge symbols).
     */
-  private[graft] def bpeTrainDeep(vocab: Seq[(String, Long)],
-      maxRounds: Int)
-      : (Vector[(Int, String, String, Long)], Map[String, Int]) = {
+  private[graft] def trainBpe(vocab: Seq[(String, Long)], maxRounds: Int)
+      : (Vector[(Int, String, String, Long)], Map[String, Seq[String]]) = {
     import scala.collection.mutable
     val words: Array[Array[String]] = vocab.map { case (w, _) =>
-      (w.map(_.toString) :+ BpeMark).toArray }.toArray
+      w.codePoints().toArray.map(cp => new String(Character.toChars(cp))) :+
+        BpeMark }.toArray
     val wcs: Array[Long] = vocab.map(_._2).toArray
     val pairCnt = mutable.HashMap.empty[(String, String), Long]
     val pairWords =
@@ -1352,9 +1280,9 @@ object TextQueries {
       }
     }
     words.indices.foreach(addPairs(_, 1L))
-    // max-heap: highest count, then SMALLEST (l, r) — the distributed
-    // trainer's ORDER BY cnt DESC, l, r. Entries are snapshots; a
-    // popped entry counts only if it still equals the live count.
+    // max-heap: highest count, then SMALLEST (l, r) — the oracle's
+    // ORDER BY cnt DESC, l, r. Entries are snapshots; a popped entry
+    // counts only if it still equals the live count.
     val ord: Ordering[(Long, String, String)] =
       new Ordering[(Long, String, String)] {
         def compare(a: (Long, String, String),
@@ -1362,8 +1290,8 @@ object TextQueries {
           val c = java.lang.Long.compare(a._1, b._1)
           if (c != 0) c
           else {
-            val cl = b._2.compareTo(a._2)
-            if (cl != 0) cl else b._3.compareTo(a._3)
+            val cl = Utf8Order.compare(b._2, a._2)
+            if (cl != 0) cl else Utf8Order.compare(b._3, a._3)
           }
         }
       }
@@ -1414,12 +1342,33 @@ object TextQueries {
           k += 1
       }
     }
-    val toks = vocab.indices.map(i => vocab(i)._1 -> words(i).length).toMap
-    (merges.result(), toks)
+    val syms = vocab.indices.map(i => vocab(i)._1 -> words(i).toSeq).toMap
+    (merges.result(), syms)
   }
 
-  /** The reference greedy left-to-right non-overlapping merge on a
-    * symbol array — the loop form of [[bpeMergeCol]]'s string fold.
+  /** String order by code point, which is the UTF-8 byte order Spark
+    * and the oracle sort strings in. Java's `compareTo` orders UTF-16
+    * units instead, which puts a non-BMP character (a surrogate pair,
+    * D800–DFFF) below U+E000–U+FFFF. At the first differing unit, two
+    * units at or above D800 are rotated so that surrogates sort last.
+    */
+  private[graft] val Utf8Order: Ordering[String] = new Ordering[String] {
+    private def rot(c: Int): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) Integer.compare(a.length, b.length)
+      else {
+        val (x, y) = (a.charAt(i).toInt, b.charAt(i).toInt)
+        if (x >= 0xD800 && y >= 0xD800) Integer.compare(rot(x), rot(y))
+        else Integer.compare(x, y)
+      }
+    }
+  }
+
+  /** The greedy left-to-right non-overlapping merge of (l, r) on a
+    * word's symbol array: "a a a" under (a,a) → "aa a".
     */
   private def mergeGreedy(syms: Array[String], l: String,
                           r: String): Array[String] = {
@@ -1435,16 +1384,35 @@ object TextQueries {
 
   /** The deep training, shared by the gates below. */
   private def deepBpe(s: SparkSession, dir: String)
-      : (Vector[(Int, String, String, Long)], Map[String, Int]) =
+      : (Vector[(Int, String, String, Long)], Map[String, Seq[String]]) =
     graft.Deployed.memo(s, "bpe-deep", dir) {
-      val vocab = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        .sortBy(_._1)
-      bpeTrainDeep(vocab, BpeDeepRounds)
+      trainBpe(vocabOf(corpusWords(s, dir)), BpeDeepRounds)
     }
+
+  /** The corpus's non-empty space-split words, one row each. */
+  private def corpusWords(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(explode(split(col("text"), " ")).as("word"))
+      .filter(length(col("word")) > 0)
+
+  /** The (word, count) table of a word stream, collected: the trainer's
+    * whole input, vocabulary-sized, never the corpus. */
+  private def vocabOf(words: DataFrame): Seq[(String, Long)] =
+    words.groupBy(col("word")).agg(count(lit(1)).as("wc"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      .sortBy(_._1)
+
+  /** (word, n_toks): each word of `words` with its token count under the
+    * tokenizer trained `BpeRounds` deep on that same stream — the
+    * frozen tokenizer as a dimension table, what T17/T27 bill with and
+    * R24's ingest join reads.
+    */
+  private[graft] def bpeTokenCounts(words: DataFrame): DataFrame = {
+    val (_, syms) = trainBpe(vocabOf(words), BpeRounds)
+    import words.sparkSession.implicits._
+    syms.toSeq.map { case (w, ss) => (w, ss.length.toLong) }
+      .toDF("word", "n_toks")
+  }
 
   /** T16d: the deep trainer's merge-table PREFIX — the first
     * `BpeRounds` rows of the `BpeDeepRounds`-deep trajectory. BPE
@@ -1546,12 +1514,13 @@ object TextQueries {
     * against the reference encoder.
     */
   def textBpeDeepEncode(s: SparkSession, dir: String): DataFrame = {
-    val (_, toks) = deepBpe(s, dir)
+    val (_, syms) = deepBpe(s, dir)
     val docsWords = graft.CachedFrames.persist(Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0))
     import s.implicits._
-    val tokDf = toks.toSeq.toDF("word", "n_toks")
+    val tokDf = syms.toSeq.map { case (w, ss) => (w, ss.length) }
+      .toDF("word", "n_toks")
     docsWords.join(broadcast(tokDf), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -1561,32 +1530,22 @@ object TextQueries {
 
   /** T16: byte-pair-encoding MERGE LEARNING — tokenizer training as a
     * first-class corpus operator (Sennrich et al.'s reference
-    * algorithm, re-expressed on the word-frequency table the way every
+    * algorithm, run on the word-frequency table the way every
     * production BPE trainer runs it). Each round: (1) weighted counts
-    * of adjacent symbol pairs across the vocabulary — a groupBy over
-    * exploded pairs, exact BIGINT weights; (2) the argmax pair with a
-    * deterministic (count DESC, left, right) tiebreak — a 1-row
-    * plan-time collect, the codebook idiom; (3) the greedy
-    * left-to-right non-overlapping merge applied vocabulary-wide as
-    * one narrow string fold ([[bpeMergeCol]]). The gate emits the
-    * learned merge table — (merge_round, left_sym, right_sym,
-    * pair_cnt) — and the DuckDB oracle restates all `BpeRounds` rounds
-    * as generated CTE blocks whose `list_reduce` fold is
-    * character-identical to the Spark `aggregate`, so the hash checks
-    * the whole training trajectory: one divergent merge anywhere
-    * cascades into every later round. Scale shape: training state is
-    * the VOCABULARY (distinct words + counts), never the corpus — at
-    * 100 TB the one corpus-sized pass is the initial word count; each
-    * round is a narrow map + a pair-count shuffle on the vocab frame,
-    * localCheckpointed per round (§8a), with a 1-row collect between
-    * rounds exactly like the k-means trainer.
+    * of adjacent symbol pairs across the vocabulary, exact BIGINT
+    * weights; (2) the argmax pair with a deterministic (count DESC,
+    * left, right) tiebreak; (3) the greedy left-to-right
+    * non-overlapping merge applied vocabulary-wide — all in
+    * [[trainBpe]] on the driver. The gate emits the learned merge table
+    * — (merge_round, left_sym, right_sym, pair_cnt) — and the DuckDB
+    * oracle restates all `BpeRounds` rounds as generated CTE blocks, so
+    * the hash checks the whole training trajectory: one divergent merge
+    * anywhere cascades into every later round. Scale shape: training
+    * state is the VOCABULARY (distinct words + counts), never the
+    * corpus — the one corpus-sized pass is the word count.
     */
   def textBpe(s: SparkSession, dir: String): DataFrame = {
-    val vocab0 = Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    val merges = bpeMerges(vocab0, BpeRounds)
+    val (merges, _) = trainBpe(vocabOf(corpusWords(s, dir)), BpeRounds)
     import s.implicits._
     merges.toDF("merge_round", "left_sym", "right_sym", "pair_cnt")
       .orderBy(col("merge_round"))
@@ -1616,7 +1575,10 @@ object TextQueries {
 
   /** The shared oracle chain: v0 (char-split vocabulary) through
     * v{BpeRounds} (post-merge vocabulary), with b1..bR the per-round
-    * argmax pairs.
+    * argmax pairs. A word's symbols sit in `wstr` delimited by chr(31),
+    * a control character no corpus word holds; a merged symbol is the
+    * concatenation l||r, appended without a delimiter, so it cannot
+    * re-match `l` — the non-overlapping rule.
     */
   private val bpeChainSql: String = s"""
     v0 AS (
@@ -1656,12 +1618,7 @@ object TextQueries {
     val docsWords = graft.CachedFrames.persist(Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0))
-    val vocab0 = docsWords.groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    val (_, vocabR) = bpeTrain(vocab0, BpeRounds)
-    val toks = vocabR.select(col("word"),
-      size(filter(split(col("wstr"), BpeSep),
-        s0 => length(s0) > lit(0))).cast("long").as("n_toks"))
-    docsWords.join(toks, Seq("word"))
+    docsWords.join(bpeTokenCounts(docsWords.select(col("word"))), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_toks")).as("n_bpe_tokens"))
       .orderBy(col("doc_id"))
@@ -1694,9 +1651,9 @@ object TextQueries {
     * subword position). Scale shape: the T17 word-stream shuffle plus
     * one per-doc aggregate whose state is the document's own token
     * sequence — the OUTPUT, so materializing it is the floor, not
-    * overhead. The symbol-id window is a one-partition rank over the
-    * tokenizer's symbol table (vocab-scale, the T16d altitude
-    * adjudication — bounded by merges + alphabet, never the corpus).
+    * overhead. The symbol ids are ranked on the driver, where the
+    * tokenizer trains, in the oracle's string order ([[Utf8Order]]);
+    * the symbol table is bounded by merges + alphabet, never the corpus.
     */
   /** The frozen-tokenizer frames T29/T30 share: the per-doc word
     * stream, the word → token-id map (raw-vocabulary-scale), and the
@@ -1707,23 +1664,14 @@ object TextQueries {
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("wpos", "word")))
       .filter(length(col("word")) > 0))
-    val vocab0 = docsWords.groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    val (_, vocabR) = bpeTrain(vocab0, BpeRounds)
-    val wordSyms = vocabR.select(col("word"),
-      filter(split(col("wstr"), BpeSep),
-        s0 => length(s0) > lit(0)).as("syms"))
-    val symIds = wordSyms
-      .select(explode(col("syms")).as("sym")).distinct()
-      .withColumn("tok_id", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("sym")))
-        .cast("long"))
-    val wordIds = wordSyms
-      .select(col("word"), posexplode(col("syms")).as(Seq("spos", "sym")))
-      .join(symIds, Seq("sym"))
-      .groupBy(col("word"))
-      .agg(sort_array(collect_list(struct(col("spos"), col("tok_id"))))
-        .as("ps"))
-      .select(col("word"), expr("transform(ps, p -> p.tok_id)").as("ids"))
+    val (_, syms) = trainBpe(vocabOf(docsWords), BpeRounds)
+    val tokId = syms.values.flatten.toSeq.distinct.sorted(Utf8Order)
+      .zipWithIndex.map { case (sym, i) => sym -> (i + 1).toLong }
+    val idOf = tokId.toMap
+    import s.implicits._
+    val symIds = tokId.toDF("sym", "tok_id")
+    val wordIds = syms.toSeq.map { case (w, ss) => (w, ss.map(idOf)) }
+      .toDF("word", "ids")
     (docsWords, wordIds, symIds)
   }
 
@@ -1908,14 +1856,10 @@ object TextQueries {
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0))
-    val vocab0 = dw.groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    val (_, vocabR) = bpeTrain(vocab0, BpeRounds)
-    val toks = vocabR.select(col("word"),
-      size(filter(split(col("wstr"), BpeSep),
-        s0 => length(s0) > lit(0))).cast("long").as("n_toks"))
+    val toks = bpeTokenCounts(dw.select(col("word")))
     // toks is RAW-vocabulary-scale (every corpus word — Heaps'-law
     // growth, not the bounded merge table): pinned SHUFFLE_HASH per
-    // the T9/T13 discipline so nothing corpus-growing ever collects
+    // the T9/T13 discipline, so it is never broadcast to every task
     val per = dw.join(toks.hint("shuffle_hash"), Seq("word"))
       .groupBy(col("source"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),

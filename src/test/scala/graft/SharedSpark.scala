@@ -43,6 +43,31 @@ object SharedSpark {
     s
   }
 
+  /** Runs `body` and returns its value with every Spark job started
+    * meanwhile, as (stage names, job description) in start order. The
+    * listener bus is drained before the listener is added and before
+    * it is read, so no job of earlier work is counted and none of
+    * `body`'s is missed. */
+  def jobsOf[T](body: => T): (T, Seq[(Seq[String], String)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.graft.SparkInternals.drainListenerBus
+    val sc = session.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Seq[String], String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos.map(_.name), Option(e.properties)
+          .map(_.getProperty("spark.job.description", "")).getOrElse("")))
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val out =
+      try { val v = body; drainListenerBus(sc); v }
+      finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (out, jobs.asScala.toSeq)
+  }
+
   /** Builds a spec's own session with `create()`, which makes it the
     * default and active session, then puts the shared one back as both
     * so later specs and library code reading `SparkSession.active`

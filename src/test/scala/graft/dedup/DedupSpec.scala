@@ -21,6 +21,19 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(sims.count(_ >= 0.9) === 25)
   }
 
+  test("a cold purge plan reads the corpus once and runs at most 37 " +
+    "Spark jobs") {
+    graft.CachedFrames.releaseAll()
+    val (rows, jobs) = SharedSpark.jobsOf(
+      DedupQueries.dedupPurgePlan(spark, dir).collect())
+    graft.CachedFrames.releaseAll()
+    assert(rows.length === 500)
+    // each read of the corpus infers its schema with a job of its own
+    assert(jobs.size <= 37, s"${jobs.size} jobs: $jobs")
+    assert(jobs.count(_._1.exists(_.startsWith("parquet at Tables"))) === 1,
+      s"corpus schema inferred more than once: $jobs")
+  }
+
   test("minhash-LSH recalls every jaccard near-dup pair") {
     val got = pairs(DedupQueries.dedupMinhash(spark, dir))
     assert(got === truth) // 8x4 banding at j>=0.9: recall 1 here

@@ -48,8 +48,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
     assert(ccLabels(edges) === unionFind(edges))
   }
 
-  test("int-typed edge columns converge identically (round-15: the " +
-    "accumulator sig reads physical ints where SQL sum() coerced)") {
+  test("int-typed edge columns converge like union-find") {
     import spark.implicits._
     val edges = Seq((1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 21))
     val got = ConnectedComponents.run(edges.toDF("u", "v")).collect()
@@ -58,9 +57,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
     assert(got.values.toSet === Set(1L, 10L, 20L))
   }
 
-  test("short-typed edge columns (SQL signature) and null-holding " +
-    "nullable int columns (null-checked accumulators) converge like " +
-    "union-find") {
+  test("short-typed and null-holding edge columns match union-find") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DataType, IntegerType, ShortType,
       StructField, StructType}
@@ -81,6 +78,69 @@ class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
     // loop filter drops the row
     assert(run(IntegerType, edges.map { case (a, b) => Row(a, b) } :+
       Row(null, 5) :+ Row(7, null) :+ Row(null, null)) === want)
+  }
+
+  /** Seeded graph shapes over `n` nodes with ids scattered from `base`:
+    * chains and cycles (over a shuffled id order), hubs, and random
+    * edges; a quarter of the edges repeat, half of those reversed. */
+  private def randomGraph(rnd: scala.util.Random, shape: Int,
+                          base: Long): Seq[(Long, Long)] = {
+    val n = 2 + rnd.nextInt(40)
+    val ids = rnd.shuffle((0 until n).map(i => base + i * 7L)).toVector
+    val edges = shape match {
+      case 0 => ids.sliding(2).map(p => (p(0), p(1))).toSeq // chain
+      case 1 => (ids :+ ids.head).sliding(2).map(p => (p(0), p(1))).toSeq
+      case 2 => ids.tail.map(v => (ids.head, v)) // hub at a random id
+      case _ => (1 to n + rnd.nextInt(2 * n)).map(_ =>
+        (ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
+    }
+    edges ++ edges.filter(_ => rnd.nextInt(4) == 0)
+      .map(e => if (rnd.nextBoolean()) e.swap else e)
+  }
+
+  test("60 seeded random graphs (chains, cycles, hubs, random edges, " +
+    "duplicate and reversed edges) match union-find graph by graph") {
+    val rnd = new scala.util.Random(20261019)
+    val graphs = (0 until 60).map(g => randomGraph(rnd, g % 4, g * 1000L))
+    // ten disjoint graphs per run: every graph keeps its own
+    // components, so each is checked on its own against union-find
+    graphs.grouped(10).foreach { batch =>
+      val got = ccLabels(batch.flatten)
+      batch.zipWithIndex.foreach { case (edges, i) =>
+        val want = unionFind(edges.filter { case (a, b) => a != b })
+        assert(want.keySet.forall(got.contains) &&
+          want.forall { case (k, v) => got(k) == v },
+          s"graph $i of its batch (${edges.size} edges) diverged")
+      }
+      // and no node outside the batch's edges is labelled
+      assert(got.keySet === batch.flatten
+        .filter { case (a, b) => a != b }
+        .flatMap(e => Seq(e._1, e._2)).toSet)
+    }
+  }
+
+  test("an input that already is a star forest runs no round; one " +
+    "that is not needs rounds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // stars centred on their minimum, edges in either orientation and
+    // repeated: already the fixpoint
+    val forest = (0 until 12).flatMap { k =>
+      val centre = k * 100L
+      (1 to 1 + rnd.nextInt(9)).map(i => centre + i)
+        .flatMap(v => Seq((centre, v), (v, centre)).take(1 + rnd.nextInt(2)))
+    }
+    val got = ConnectedComponents.run(forest.toDF("u", "v"), maxIters = 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === unionFind(forest))
+    // a star centred above one member is no star forest in canonical
+    // orientation (3 is both child of 1 and parent of 7)
+    val offCentre = Seq((3L, 1L), (3L, 7L), (3L, 9L))
+    val e = intercept[IllegalArgumentException](
+      ConnectedComponents.run(offCentre.toDF("u", "v"), maxIters = 0)
+        .collect())
+    assert(e.getMessage.contains("did not converge"))
+    assert(ccLabels(offCentre) === unionFind(offCentre))
   }
 
   test("disjoint components keep distinct roots") {

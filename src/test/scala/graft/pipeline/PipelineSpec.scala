@@ -589,6 +589,25 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("deploy packs the corpus once: a cold deploy runs at most 34 " +
+    "Spark jobs and writes the data_shard_manifest gate's rows") {
+    graft.CachedFrames.releaseAll()
+    graft.text.TextQueries.releaseDeployedTokenSequences()
+    val out = java.nio.file.Files.createTempDirectory("graft-deploy").toString
+    val (_, jobs) = graft.SharedSpark.jobsOf(ShardReader.deploy(spark, dir, out))
+    // half the 68 jobs of a deploy that packed the corpus twice and
+    // trained its tokenizer with several Spark jobs per merge
+    assert(jobs.size <= 34, s"${jobs.size} jobs: $jobs")
+    val gate = PipelineQueries.dataShardManifest(spark, dir).collect()
+      .map(_.toSeq).toSeq
+    graft.CachedFrames.releaseAll()
+    val written = spark.read.parquet(s"$out/manifest")
+      .select("epoch", "worker", "n_blocks", "n_tokens", "blocks_md5",
+        "tokens_md5").orderBy("epoch", "worker").collect().map(_.toSeq).toSeq
+    assert(written === gate)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("P39 readShard: ranks are pairwise disjoint, each shard is " +
     "position-ordered, and the union over ranks IS the epoch order " +
     "bit-for-bit") {
@@ -797,18 +816,19 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     val out = java.nio.file.Files
       .createTempDirectory("graft-blocks").toString
-    val (nb, nt) = CurationWriter.writeBlocks(spark, dir, out)
+    CurationWriter.writeBlocks(spark, dir, out)
     graft.CachedFrames.releaseAll()
     val gate = PipelineQueries.dataPackTokens(spark, dir).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
       .toMap
     graft.CachedFrames.releaseAll()
-    assert(nb === gate.size.toLong)
-    assert(nt === gate.values.map(_._1).sum)
-    val back = spark.read.parquet(out).collect()
+    def written = spark.read.parquet(out).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getSeq[Long](4), r.getString(5)))
+        r.getSeq[Long](4), r.getString(5))).sortBy(_._1).toSeq
+    val back = written
+    assert(back.length === gate.size)
+    assert(back.map(_._2).sum === gate.values.map(_._1).sum)
     back.foreach { case (b, n, nd, fd, ids, m) =>
       val (gn, gnd, gfd, gm) = gate(b)
       assert(n === gn && nd === gnd && fd === gfd,
@@ -830,9 +850,9 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       }
     }
     // idempotent
-    val (nb2, nt2) = CurationWriter.writeBlocks(spark, dir, out)
+    CurationWriter.writeBlocks(spark, dir, out)
     graft.CachedFrames.releaseAll()
-    assert((nb2, nt2) === ((nb, nt)))
+    assert(written === back)
   }
 
   test("P29b: the tokenized writer materializes T29's token-id " +

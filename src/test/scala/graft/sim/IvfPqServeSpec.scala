@@ -2,7 +2,6 @@ package graft.sim
 
 import graft.SharedSpark
 import graft.functions.VectorFunctions.{dot, dotSeq, normalize, roundHalfUp}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -161,23 +160,7 @@ class IvfPqServeSpec extends AnyFunSuite with SharedSpark with BeforeAndAfterAll
     "schema inference of the codes table") {
     val serve = SimQueries.ivfPqQueryServer(spark, rawArtifact, nprobe = 3)
     serve(batch(batches.head)).collect() // warm: plan caches, codegen
-    val sc = spark.sparkContext
-    // (stage names, job description) per job started
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Seq[String], String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add((e.stageInfos.map(_.name), Option(e.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")))
-    }
-    org.apache.spark.graft.SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      serve(batch(batches(1))).collect()
-      org.apache.spark.graft.SparkInternals.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val all = jobs.asScala.toSeq
+    val (_, all) = SharedSpark.jobsOf(serve(batch(batches(1))).collect())
     assert(all.nonEmpty && all.size <= 8, s"${all.size} jobs: $all")
     // a codes table of more than 32 files (this one) is still listed by
     // a parallel-listing job under the same call site; only a job that

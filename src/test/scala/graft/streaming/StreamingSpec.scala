@@ -3098,13 +3098,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val vocab0 = d.select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    val (_, vocabR) = graft.text.TextQueries.bpeTrain(
-      vocab0, graft.text.TextQueries.BpeRounds)
-    val toks = StreamBpeTokens.tokenTable(vocabR)
-      .localCheckpoint(false) // frozen tokenizer: compute once
+    val toks = graft.text.TextQueries.bpeTokenCounts(
+      d.select(explode(split(col("text"), " ")).as("word"))
+        .filter(length(col("word")) > 0))
     // batch twin on the training corpus itself (no OOV possible)
     val want = graft.text.TextQueries.textBpeEncode(spark, sfDir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), 0L))).toMap

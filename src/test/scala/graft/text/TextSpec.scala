@@ -197,13 +197,16 @@ class TextSpec extends AnyFunSuite with SharedSpark {
   }
 
   /** Independent in-memory reference BPE (Sennrich-style greedy merge
-    * on a word-frequency list) — the semantics T16's distributed
-    * string-fold must reproduce merge-for-merge.
+    * on a word-frequency list, recounting every round) — the semantics
+    * the incremental trainer must reproduce merge-for-merge. Symbols
+    * start as code points; ties break by the UTF-8 bytes of (l, r).
     */
   private def refBpe(words: Seq[(String, Long)],
                      rounds: Int): Seq[(Int, String, String, Long)] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    def utf8(x: String): Seq[Int] = x.getBytes("UTF-8").toSeq.map(_ & 0xff)
     var vocab: Seq[(Vector[String], Long)] = words.map { case (w, c) =>
-      (w.map(_.toString).toVector :+ TextQueries.BpeMark, c)
+      (codePoints(w) :+ TextQueries.BpeMark, c)
     }
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var k = 1
@@ -216,7 +219,7 @@ class TextSpec extends AnyFunSuite with SharedSpark {
       }
       if (counts.nonEmpty) {
         val ((l, r), cnt) =
-          counts.toSeq.minBy { case ((pl, pr), c) => (-c, pl, pr) }
+          counts.toSeq.minBy { case ((pl, pr), c) => (-c, utf8(pl), utf8(pr)) }
         out += ((k, l, r, cnt))
         vocab = vocab.map { case (syms, c) => (refMerge(syms, l, r), c) }
       }
@@ -224,6 +227,9 @@ class TextSpec extends AnyFunSuite with SharedSpark {
     }
     out.result()
   }
+
+  private def codePoints(w: String): Vector[String] =
+    w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))
 
   /** greedy left-to-right non-overlapping single-pair merge */
   private def refMerge(syms: Vector[String], l: String,
@@ -241,23 +247,21 @@ class TextSpec extends AnyFunSuite with SharedSpark {
   /** encode one word by applying the learned merges in order */
   private def refEncode(w: String,
                         merges: Seq[(Int, String, String, Long)]): Vector[String] =
-    merges.foldLeft(w.map(_.toString).toVector :+ TextQueries.BpeMark) {
+    merges.foldLeft(codePoints(w) :+ TextQueries.BpeMark) {
       case (syms, (_, l, r, _)) => refMerge(syms, l, r)
     }
 
-  test("BPE: the distributed string-fold trainer reproduces a reference " +
-    "implementation merge-for-merge on planted vocabularies") {
-    import spark.implicits._
+  test("BPE: the trainer matches a reference merge-for-merge on " +
+    "planted vocabularies") {
     // planted: shared subword structure ("an"/"ana"), a run of repeats
     // ("aaaa" exercises the non-overlapping rule), count-weighted ties
     val planted = Seq(
       ("banana", 5L), ("bandana", 3L), ("ana", 7L), ("nab", 2L),
       ("aaaa", 4L), ("abab", 6L), ("b", 9L))
-    val vocab0 = planted.toDF("word", "wc")
-    val got = TextQueries.bpeMerges(vocab0, 6)
+    val (got, _) = TextQueries.trainBpe(planted, 6)
     val want = refBpe(planted, 6)
     assert(got === want,
-      s"distributed merges $got diverged from reference $want")
+      s"trained merges $got diverged from reference $want")
     // the merge table must chain: some round merges a multi-char symbol
     assert(got.exists { case (_, l, r, _) => l.length > 1 || r.length > 1 },
       "no merge consumed an earlier round's symbol — chaining broken")
@@ -266,7 +270,6 @@ class TextSpec extends AnyFunSuite with SharedSpark {
   test("BPE fuzz: seeded random vocabularies over {a,b,c} — maximal " +
     "merge collisions and repeat runs — reproduce the reference merge " +
     "sequences exactly") {
-    import spark.implicits._
     // a 3-letter alphabet forces the adversarial cases: long repeat
     // runs (the non-overlap rule), count-weighted ties (the (cnt,l,r)
     // tiebreak), and merged symbols immediately re-merging
@@ -280,36 +283,68 @@ class TextSpec extends AnyFunSuite with SharedSpark {
       val planted = raw.groupBy(_._1).map { case (w, xs) =>
         (w, xs.map(_._2).sum)
       }.toSeq
-      val got = TextQueries.bpeMerges(planted.toDF("word", "wc"), 5)
+      val (got, _) = TextQueries.trainBpe(planted, 5)
       val want = refBpe(planted, 5)
       assert(got === want,
-        s"trial $t vocab $planted: distributed $got != reference $want")
+        s"trial $t vocab $planted: trained $got != reference $want")
     }
   }
 
   test("BPE encode: post-merge vocabulary token counts equal the " +
     "reference encoder applying the merge table in order") {
-    import spark.implicits._
     val planted = Seq(
       ("banana", 5L), ("bandana", 3L), ("ana", 7L), ("nab", 2L),
       ("aaaa", 4L), ("abab", 6L), ("b", 9L))
-    val (merges, vfinal) = TextQueries.bpeTrain(planted.toDF("word", "wc"), 6)
-    val got = vfinal.select(col("word"),
-        size(org.apache.spark.sql.functions.filter(
-          split(col("wstr"), TextQueries.BpeSep),
-          s0 => length(s0) > lit(0))).as("n"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val (merges, syms) = TextQueries.trainBpe(planted, 6)
     planted.foreach { case (w, _) =>
       val ref = refEncode(w, merges)
-      assert(got(w) === ref.length,
-        s"'$w': distributed token count ${got(w)} != reference " +
-          s"${ref.length} (${ref.mkString("|")})")
+      assert(syms(w) === ref,
+        s"'$w': trained symbols ${syms(w).mkString("|")} != reference " +
+          s"${ref.mkString("|")}")
       // merging only ever shrinks: cost ≤ chars + end marker
-      assert(got(w) <= w.length + 1)
+      assert(syms(w).length <= w.length + 1)
     }
     // the trained tokenizer compresses the planted subword structure
-    assert(got("banana") < "banana".length + 1,
+    assert(syms("banana").length < "banana".length + 1,
       "no merge applied to 'banana' — training not compressing")
+  }
+
+  test("BPE on non-BMP words: symbols are code points, count ties and " +
+    "symbol ids follow UTF-8 byte order, as pinned from the SQL trainer") {
+    import spark.implicits._
+    val (pua, grin, beam, repl) = ("\uE000", "\uD83D\uDE00", "\uD83D\uDE01",
+      "\uFFFD")
+    val m = TextQueries.BpeMark
+    val words = Seq((pua + "b", 5), (grin + "b", 5), (grin + pua, 2),
+      ("a" + beam + repl + "a", 3), (repl + beam, 1))
+    // rounds 2/3 and 8/9 tie a U+E000 symbol against a non-BMP one: UTF-8
+    // order puts U+E000 first, UTF-16 order (String.compareTo) the other
+    val want = Seq((1, "b", m, 5 * 2L), (2, pua, "b" + m, 5L),
+      (3, grin, "b" + m, 5L), (4, "a", m, 3L), (5, "a", beam, 3L),
+      (6, "a" + beam, repl, 3L), (7, "a" + beam + repl, "a" + m, 3L),
+      (8, pua, m, 2L), (9, grin, pua + m, 2L), (10, repl, beam, 1L),
+      (11, repl + beam, m, 1L))
+    val vocab = words.map { case (w, n) => (w, n.toLong) }
+    assert(TextQueries.trainBpe(vocab, 20)._1 === want)
+    assert(refBpe(vocab, 20) === want)
+    // the gates over a corpus of those words, pinned from the
+    // distributed trainer and its symbol-id window
+    val d = java.nio.file.Files.createTempDirectory("graft-bpe-utf8").toString
+    words.zipWithIndex.map { case ((w, n), i) =>
+      ((i + 1).toLong, "src", Seq.fill(n)(w).mkString(" "))
+    }.toDF("doc_id", "source", "text").write.parquet(s"$d/documents.parquet")
+    val merges = TextQueries.textBpe(spark, d).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+    assert(merges.toSeq === want.take(TextQueries.BpeRounds))
+    val ids = TextQueries.bpeSymbolTable(spark, d).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._2).toSeq
+    assert(ids === Seq(m, "a" + beam + repl + "a" + m, pua + m,
+      pua + "b" + m, repl, grin, grin + "b" + m, beam).zip(1L to 8L))
+    val seqs = TextQueries.bpeTokenSequences(spark, d).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1).toSeq
+    graft.CachedFrames.releaseAll()
+    assert(seqs === Seq(1L -> Seq.fill(5)(4L), 2L -> Seq.fill(5)(7L),
+      3L -> Seq(6L, 3L, 6L, 3L), 4L -> Seq(2L, 2L, 2L), 5L -> Seq(5L, 8L, 1L)))
   }
 
   test("deep BPE: the incremental heap trainer replays the reference " +
@@ -322,7 +357,7 @@ class TextSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       .sortBy(_._1)
     val depth = 2048 // full-trajectory replay; reference is O(V·len/round)
-    val (got, toks) = TextQueries.bpeTrainDeep(vocab, depth)
+    val (got, syms) = TextQueries.trainBpe(vocab, depth)
     val want = refBpe(vocab, depth)
     assert(got.length === want.length,
       s"trajectory lengths differ: ${got.length} vs ${want.length}")
@@ -335,11 +370,11 @@ class TextSpec extends AnyFunSuite with SharedSpark {
     val wantCk = TextQueries.bpeCkptRows(want.toVector)
     assert(gotCk === wantCk)
     assert(gotCk.nonEmpty && gotCk.last._1 === got.length)
-    // every word's deep token count matches the reference encoder
+    // every word's deep symbols match the reference encoder
     val sample = vocab.take(200)
     sample.foreach { case (w, _) =>
-      assert(toks(w) === refEncode(w, got).length,
-        s"deep token count for '$w' diverged from reference encode")
+      assert(syms(w) === refEncode(w, got),
+        s"deep symbols for '$w' diverged from reference encode")
     }
   }
 
@@ -355,7 +390,7 @@ class TextSpec extends AnyFunSuite with SharedSpark {
       val planted = raw.groupBy(_._1).map { case (w, xs) =>
         (w, xs.map(_._2).sum)
       }.toSeq.sortBy(_._1)
-      val (got, _) = TextQueries.bpeTrainDeep(planted, 10000)
+      val (got, _) = TextQueries.trainBpe(planted, 10000)
       val want = refBpe(planted, 10000)
       assert(got === want.toVector,
         s"trial $t vocab $planted: incremental $got != reference $want")
@@ -374,7 +409,7 @@ class TextSpec extends AnyFunSuite with SharedSpark {
     }.groupBy(_._1).map { case (w, xs) => (w, xs.map(_._2).sum) }
       .toSeq.sortBy(_._1)
     val depth = 2000
-    val (gotBig, _) = TextQueries.bpeTrainDeep(big, depth)
+    val (gotBig, _) = TextQueries.trainBpe(big, depth)
     val wantBig = refBpe(big, depth)
     assert(gotBig.length === wantBig.length)
     assert(gotBig === wantBig.toVector,
