@@ -357,14 +357,15 @@ object PipelineQueries {
   private[graft] def packedTokenStream(s: SparkSession,
                                        dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // √n width off the DOCUMENTS count (not the sequence frame — that
-    // would force the tokenizer train just to size buckets)
-    val BucketWidth = bucketWidthFor(Tables.documents(s, dir).count())
     // deployed-tokenizer memo (round 14): the encode is offline input
     // prep shared by every P32/P33/P35/P36 consumer — see
     // TextQueries.deployedTokenSequences
-    val seqs = graft.text.TextQueries.deployedTokenSequences(s, dir)
-      .withColumn("bucket", expr(s"doc_id div $BucketWidth"))
+    val tokens = graft.text.TextQueries.deployedTokenSequences(s, dir)
+    // √n width off the memo's own rows (one per tokenized document),
+    // so only the tokenizer reads the corpus; the width shapes the
+    // prefix-sum partitions, never a position
+    val BucketWidth = bucketWidthFor(tokens.count())
+    val seqs = tokens.withColumn("bucket", expr(s"doc_id div $BucketWidth"))
     val bucketTotals = seqs.groupBy(col("bucket"))
       .agg(sum(col("n_tokens")).as("bt"))
     val offsets = bucketTotals.withColumn("offset",

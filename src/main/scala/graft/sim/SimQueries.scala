@@ -35,6 +35,12 @@ object SimQueries {
       col("embedding").cast("array<double>").as("v"), col("label"))
       .withColumn("vn", normalize(col("v")))
 
+  /** The standard query set of a (vec_id, v, …) corpus frame: the
+    * `vec_id < NumQueries` rows as the (q_id, v) batch a server takes. */
+  private def gateQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), col("v"))
+
   private val vecsSql =
     """SELECT vec_id, embedding::DOUBLE[] AS v,
        list_transform(embedding::DOUBLE[], x ->
@@ -576,9 +582,12 @@ object SimQueries {
     // out of the anti-join (a ranged empty frame cost a broadcast job)
     if (fs.exists(p))
       s.read.schema(tombstoneSchema).parquet(p.toString).distinct()
-    else s.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType.fromDDL(tombstoneSchema))
+    else noTombstones(s)
   }
+
+  private def noTombstones(s: SparkSession): DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL(tombstoneSchema))
 
   /** The tombstone-honoring artifact serving core for ARBITRARY query
     * frames (q_id, qvn, cluster) — S31/S34's candidate discipline
@@ -652,8 +661,7 @@ object SimQueries {
                               artifact: String,
                               nprobe: Int = 1): DataFrame = {
     val q = ivfQueryAssigner(s, artifact, nprobe)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      gateQueries(vecs(s, dir)))
     serveArtifactDeletedOn(s, q, artifact, excludeSelf = true)
       .orderBy(col("q_id"), col("rank"))
   }
@@ -1634,8 +1642,7 @@ object SimQueries {
     val artifact = deletedArtifactOf(s, dir)
     rangeArtifactDeletedOn(s,
       ivfQueryAssigner(s, artifact, NProbe)(
-        vecs(s, dir).filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("v"))),
+        gateQueries(vecs(s, dir))),
       artifact, excludeSelf = true)
   }
 
@@ -1745,8 +1752,7 @@ object SimQueries {
         .filter(col("rank") <= TopK)
         .select(col("q_id"), col("neighbor")))
     val nTruth = NumQueries.toLong * TopK
-    val queries = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v")).localCheckpoint(false)
+    val queries = gateQueries(e).localCheckpoint(false)
     // round-14 (guide §2.6): independent rungs over shared persisted
     // frames — overlap from a driver pool; force shared frames first
     // (see ivfTune)
@@ -2646,8 +2652,7 @@ object SimQueries {
 
   def pqQuantize(s: SparkSession, dir: String): DataFrame = {
     val (sub, cb0, cb1) = pqCore(s, dir)
-    sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
+    pqEncoded(sub, cb0, cb1)
       .select(col("vec_id"),
         col("a0.code").as("code0"), col("a1.code").as("code1"),
         round(col("a0.d2") + col("a1.d2"), 6).as("err"))
@@ -2671,8 +2676,7 @@ object SimQueries {
   def pqTrain(s: SparkSession, dir: String): DataFrame = {
     val (sub, cb0, cb1) = pqCore(s, dir)
     val seeded = graft.CachedFrames.persist(
-      sub.withColumn("a0", pqAssignment("s0", cb0))
-        .withColumn("a1", pqAssignment("s1", cb1))
+      pqEncoded(sub, cb0, cb1)
         .select(col("vec_id"), col("s0"), col("s1"),
           col("a0.code").as("c0"), col("a1.code").as("c1"),
           round(col("a0.d2") + col("a1.d2"), 6).as("err_seed")))
@@ -2772,8 +2776,7 @@ object SimQueries {
 
   private def knnPqAdcOn(sub: DataFrame, cb0: Seq[(Long, Seq[Double])],
       cb1: Seq[(Long, Seq[Double])]): DataFrame = {
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
+    val codes = pqEncoded(sub, cb0, cb1)
       .select(col("vec_id"),
         col("a0.code").as("code0"), col("a1.code").as("code1"))
     val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
@@ -2893,25 +2896,30 @@ object SimQueries {
   private def knnPqRefineOn(e: DataFrame, sub: DataFrame,
       cb0: Seq[(Long, Seq[Double])],
       cb1: Seq[(Long, Seq[Double])]): DataFrame = {
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
+    val codes = pqEncoded(sub, cb0, cb1)
       .select(col("vec_id"),
         col("a0.code").as("code0"), col("a1.code").as("code1"))
     val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
     val lut1 = pqLut(sub, "s1", cb1, "code1", "d1")
     val wAdc = Window.partitionBy(col("q_id"))
       .orderBy(col("adc"), col("neighbor"))
-    val shortlist = codes.join(broadcast(lut0), Seq("code0"))
+    exactRerank(e, codes.join(broadcast(lut0), Seq("code0"))
       .join(broadcast(lut1), Seq("q_id", "code1"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor"),
         round(col("d0") + col("d1"), 6).as("adc"))
       .withColumn("srank", row_number().over(wAdc))
       .filter(col("srank") <= TopK * RefineFactor)
-      .drop("srank")
-    // exact rescore of shortlist members only: the |Q|·k·factor-row
-    // shortlist broadcasts against the corpus scan (id equi-join), and
-    // the |Q|-row query block broadcasts for the other operand.
+      .drop("srank"))
+  }
+
+  /** The exact rescore of a (q_id, neighbor, …) shortlist: its
+    * members only — the |Q|·k·factor-row shortlist broadcasts against
+    * the corpus scan (id equi-join), and the |Q|-row query block
+    * broadcasts for the other operand — then the final top-k by
+    * (cos desc, neighbor). Keeps the shortlist's columns, adds `cos`.
+    */
+  private def exactRerank(e: DataFrame, shortlist: DataFrame): DataFrame = {
     val qv = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("vn").as("qvn"))
     val wExact = Window.partitionBy(col("q_id"))
@@ -2919,8 +2927,8 @@ object SimQueries {
     e.select(col("vec_id").as("neighbor"), col("vn"))
       .join(broadcast(shortlist), Seq("neighbor"))
       .join(broadcast(qv), Seq("q_id"))
-      .select(col("q_id"), col("neighbor"), col("adc"),
-        round(dot(col("qvn"), col("vn")), 6).as("cos"))
+      .select(shortlist.columns.map(col) :+
+        round(dot(col("qvn"), col("vn")), 6).as("cos"): _*)
       .withColumn("rank", row_number().over(wExact))
       .filter(col("rank") <= TopK)
       .orderBy(col("q_id"), col("rank"))
@@ -2975,50 +2983,103 @@ object SimQueries {
     * way. PQ here encodes the original vectors (faiss
     * `by_residual=false`); residual encoding is the accuracy upgrade
     * at the same plan shape.
+    *
+    * Every in-memory IVF-PQ gate is `serve(train(corpus))`: the one
+    * trainer ([[ivfPqTrain]]) and the one ADC server the deployed
+    * artifacts serve through ([[adcQueryServer]]), over the trained
+    * codes instead of an artifact's.
     */
   def knnIvfPq(s: SparkSession, dir: String): DataFrame =
-    knnIvfPqOn(vecs(s, dir))
+    ivfPqTwin(vecs(s, dir))
 
-  /** The in-memory IVFPQ pipeline over an explicit (vec_id, v, vn,
-    * label) corpus frame — factored (round 13) so the S50 OPQ twin
-    * runs the identical train → encode → ADC-serve chain over the
-    * ROTATED space. */
-  private def knnIvfPqOn(e: DataFrame): DataFrame = {
-    val cents = collectCents(e)
-    val (sub, cb0, cb1) = pqCoreOn(e, vecCol = "vn")
-    knnIvfPqParts(e, cents, sub, cb0, cb1)
+  /** serve(train(e)) over e's standard query set, self excluded. */
+  private def ivfPqTwin(e: DataFrame, residual: Boolean = false,
+                        nprobe: Int = 1): DataFrame =
+    ivfPqServer(ivfPqTrain(e, residual), nprobe)(gateQueries(e))
+
+  /** The trained IVF-PQ state: the centroid table's (label, cv, cvn)
+    * rows and their (label, cvn) literals, both subspace codebooks,
+    * the encoding, and the persisted (vec_id, label, cluster, s0, s1)
+    * subspace frame the books were trained on. */
+  private final case class IvfPqState(centroidRows: Seq[Row],
+      centroidSchema: StructType, cents: Seq[(Int, Seq[Double])],
+      cb0: Seq[(Long, Seq[Double])], cb1: Seq[(Long, Seq[Double])],
+      residual: Boolean, books: String, sub: DataFrame) {
+    /** The trained codes: (vec_id, code0, code1, cluster). */
+    def codes: DataFrame = pqEncoded(sub, cb0, cb1).select(col("vec_id"),
+      col("a0.code").as("code0"), col("a1.code").as("code1"),
+      col("cluster"))
   }
 
-  /** The IVFPQ serve assembled from EXPLICIT trained parts — the seam
-    * [[knnRecallEval]] shares one (centroids, subvectors, codebooks)
-    * build across its method panel (round-15, guide §1.2/§2.4).
+  /** The one IVF-PQ trainer over a (vec_id, v, vn, label) frame:
+    * label-mean centroids, then both subspace codebooks over the
+    * [[pqSubspaces]] split of every vector — `raw` or `residual`
+    * encoding (the `_encoding` kinds), `label` means or one `lloyd`
+    * alternation on top of them (the `_books` kinds). Every build,
+    * in-memory gate and drift monitor trains here.
     */
-  private def knnIvfPqParts(e: DataFrame, cents: Seq[(Int, Seq[Double])],
-      sub: DataFrame, cb0: Seq[(Long, Seq[Double])],
-      cb1: Seq[(Long, Seq[Double])]): DataFrame = {
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    val db = e.select(col("vec_id"),
-        bestClusterCol(cents).as("cluster"))
-      .join(codes, Seq("vec_id"))
-    val q = db.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("cluster"))
-    val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
-    val lut1 = pqLut(sub, "s1", cb1, "code1", "d1")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("neighbor"))
-    q.join(db, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut0), Seq("q_id", "code0"))
-      .join(broadcast(lut1), Seq("q_id", "code1"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
-        round(col("d0") + col("d1"), 6).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .orderBy(col("q_id"), col("rank"))
+  private def ivfPqTrain(e: DataFrame, residual: Boolean = false,
+                         books: String = "label"): IvfPqState = {
+    if (books != "label" && books != "lloyd")
+      throw new UnsupportedOperationException(
+        s"unknown PQ-book trainer '$books' (label | lloyd)")
+    val table = centroids(e)
+    val rows = table.collect().toSeq
+    val cents = rows.map(r => (r.getInt(0), r.getSeq[Double](2).toVector))
+      .sortBy(_._1)
+    // persisted: it feeds both codebook builds and the codes
+    val sub = graft.CachedFrames.persist(pqSubspaces(e, cents, residual)
+      .select(col("vec_id"), col("label"), col("cluster"), col("s0"),
+        col("s1")))
+    def book(of: DataFrame, code: Column, c: String) =
+      KMeans.collectCodebook(KMeans.meanByKey(
+        of.select(code.as("code"), col(c).as("v")), "code"))
+    val l0 = book(sub, col("label").cast("long"), "s0")
+    val l1 = book(sub, col("label").cast("long"), "s1")
+    // S52's Lloyd alternation: every subvector takes its label-mean
+    // codeword, each codeword re-averages over its actual members
+    val (cb0, cb1) =
+      if (books == "label") (l0, l1)
+      else {
+        val seeded = graft.CachedFrames.persist(pqEncoded(sub, l0, l1)
+          .select(col("s0"), col("s1"), col("a0.code").as("c0"),
+            col("a1.code").as("c1")))
+        (book(seeded, col("c0"), "s0"), book(seeded, col("c1"), "s1"))
+      }
+    IvfPqState(rows, table.schema, cents, cb0, cb1, residual, books, sub)
   }
+
+  /** PQ subvector width: the 64-dim vectors split into two halves. */
+  private val PqHalf = 32
+
+  /** The one IVF-PQ encoder's split: every row of `e` (which needs
+    * `vec_id` and `vn`) gains its nearest centroid as `cluster` and
+    * the two halves s0/s1 of `vn` — or, residually, of vn minus that
+    * centroid (faiss `by_residual`).
+    */
+  private def pqSubspaces(e: DataFrame, cents: Seq[(Int, Seq[Double])],
+                          residual: Boolean): DataFrame = {
+    val assigned = e.withColumn("cluster", bestClusterCol(cents))
+    val x =
+      if (!residual) assigned.withColumn("pq_x", col("vn"))
+      else {
+        import e.sparkSession.implicits._
+        assigned.join(broadcast(cents.toDF("cluster", "cvec")),
+            Seq("cluster"))
+          .withColumn("pq_x", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
+          .drop("cvec")
+      }
+    x.withColumn("s0", slice(col("pq_x"), 1, PqHalf))
+      .withColumn("s1", slice(col("pq_x"), PqHalf + 1, PqHalf))
+      .drop("pq_x")
+  }
+
+  /** The encoder's argmin: each half's nearest codeword as the a0/a1
+    * (d2, code) structs. */
+  private def pqEncoded(sub: DataFrame, cb0: Seq[(Long, Seq[Double])],
+                        cb1: Seq[(Long, Seq[Double])]): DataFrame =
+    sub.withColumn("a0", pqAssignment("s0", cb0))
+      .withColumn("a1", pqAssignment("s1", cb1))
 
   val knnIvfPqSql: String = s"""
     WITH ${pqCoreSql("vn")},
@@ -3117,36 +3178,27 @@ object SimQueries {
     */
   private[graft] def ivfPqIndexWriteOn(e: DataFrame, out: String,
                                        encoding: String = "raw",
-                                       track: Boolean = true): Unit = {
-    val s = e.sparkSession
-    val Half = 32
-    centroids(e).write.mode("overwrite").parquet(s"$out/centroids")
-    val cents = collectCents(e)
-    val sub = graft.CachedFrames.persist(
-      e.select(col("vec_id"), col("label"),
-        slice(col("vn"), 1, Half).as("s0"),
-        slice(col("vn"), Half + 1, Half).as("s1")))
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        sub.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    val cb0 = codebook("s0")
-    val cb1 = codebook("s1")
+                                       track: Boolean = true): Unit =
+    ivfPqWrite(ivfPqTrain(e), out, encoding, track)
+
+  /** Writes a trained state as the three-table artifact at `out` with
+    * its `_encoding` and `_books` markers; `track` publishes `codes`
+    * (see [[ivfPqIndexWriteOn]]). */
+  private def ivfPqWrite(t: IvfPqState, out: String, encoding: String,
+                         track: Boolean = true): Unit = {
+    val s = t.sub.sparkSession
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(t.centroidRows.asJava, t.centroidSchema).coalesce(1)
+      .write.mode("overwrite").parquet(s"$out/centroids")
     import s.implicits._
-    (cb0.map { case (c, v) => (0, c, v) } ++
-      cb1.map { case (c, v) => (1, c, v) })
+    (t.cb0.map { case (c, v) => (0, c, v) } ++
+      t.cb1.map { case (c, v) => (1, c, v) })
       .toDF("sub", "code", "cv")
       .write.mode("overwrite").parquet(s"$out/pq_codebooks")
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    e.select(col("vec_id"), bestClusterCol(cents).as("cluster"))
-      .join(codes, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster")
+    t.codes.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$out/codes")
-    writeEncodingMarker(s, out, encoding)
-    writeBooksMarker(s, out, "label")
+    writeMarker(s, out, "_encoding", encoding)
+    writeMarker(s, out, "_books", t.books)
     // held at birth: the build's one walk is the last data-dir listing
     // the serving path ever pays (E33)
     if (track) graft.streaming.SnapshotManifest.track(s, out, "codes")
@@ -3164,24 +3216,9 @@ object SimQueries {
     * gates build fresh ones). Consumers that support only one kind
     * refuse the other LOUDLY by name.
     */
-  private def writeEncodingMarker(s: SparkSession, out: String,
-                                  kind: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$out/_encoding")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val o = fs.create(p, true)
-    try o.write(kind.getBytes("UTF-8")) finally o.close()
-  }
-
   private[graft] def encodingOf(
-      fs: org.apache.hadoop.fs.FileSystem, artifact: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$artifact/_encoding")
-    if (!fs.exists(p)) "raw"
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-  }
+      fs: org.apache.hadoop.fs.FileSystem, artifact: String): String =
+    markerOf(fs, artifact, "_encoding", "raw")
 
   /** The artifact's PQ-book TRAINER marker (S52, round 14): `label`
     * (seed means) and `lloyd` (S52's alternation-refined books)
@@ -3193,18 +3230,23 @@ object SimQueries {
     * rebuild promises a gain the refresh won't deliver. Absent ⇒
     * `label` (every pre-marker artifact was seed-trained).
     */
-  private def writeBooksMarker(s: SparkSession, out: String,
-                               kind: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$out/_books")
+  private[graft] def booksOf(
+      fs: org.apache.hadoop.fs.FileSystem, artifact: String): String =
+    markerOf(fs, artifact, "_books", "label")
+
+  private def writeMarker(s: SparkSession, out: String, name: String,
+                          kind: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$out/$name")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val o = fs.create(p, true)
     try o.write(kind.getBytes("UTF-8")) finally o.close()
   }
 
-  private[graft] def booksOf(
-      fs: org.apache.hadoop.fs.FileSystem, artifact: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$artifact/_books")
-    if (!fs.exists(p)) "label"
+  private def markerOf(fs: org.apache.hadoop.fs.FileSystem,
+                       artifact: String, name: String,
+                       absent: String): String = {
+    val p = new org.apache.hadoop.fs.Path(s"$artifact/$name")
+    if (!fs.exists(p)) absent
     else {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
@@ -3240,9 +3282,7 @@ object SimQueries {
   private[graft] def ivfPqServeArtifact(s: SparkSession, dir: String,
                                         artifact: String): DataFrame =
     ivfPqQueryServer(s, artifact, excludeSelf = true)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
-      .orderBy(col("q_id"), col("rank"))
+      gateQueries(vecs(s, dir)))
 
   /** The compressed serving face for ARBITRARY (q_id, v) query
     * frames. Codebooks and centroids collect ONCE when the closure is
@@ -3255,8 +3295,9 @@ object SimQueries {
     * to [[ivfPqServeCore]] as small local frames with the probed
     * labels. The per-batch Spark work is the pruned codes scan, the
     * broadcast joins and the rank; no query expression is evaluated
-    * per join side. The batch gates, the OPQ server and the streamed
-    * face (R37) all serve through this closure, so they cannot drift.
+    * per join side. The deployed and in-memory IVF-PQ gates, the OPQ
+    * server and the streamed face (R37) all serve through
+    * [[adcQueryServer]], so they cannot drift.
     *
     * `nprobe` is the DEPLOYED recall knob (round 13, r12 verdict
     * item 1 — the in-memory S6b rung had it, the serving closure a
@@ -3271,20 +3312,43 @@ object SimQueries {
   private[graft] def ivfPqQueryServer(s: SparkSession, artifact: String,
       excludeSelf: Boolean = false,
       nprobe: Int = 1): DataFrame => DataFrame =
-    adcQueryServer(s, artifact, excludeSelf, nprobe, residual = false)
+    artifactServer(s, artifact, excludeSelf, nprobe, residual = false)
 
-  /** The S43/S45 serving closure. Raw LUTs are one per query, keyed
-    * q_id; residual LUTs are one per (query, probed list) — the
-    * query's residual against THAT list's centroid — keyed
-    * (q_id, cluster).
-    */
-  private def adcQueryServer(s: SparkSession, artifact: String,
+  /** The deployed face of [[adcQueryServer]]: the artifact's centroids
+    * and books collected once, its codes and tombstones resolved per
+    * batch, so inserts, compactions and deletes between batches are
+    * visible to the next one. */
+  private def artifactServer(s: SparkSession, artifact: String,
       excludeSelf: Boolean, nprobe: Int,
       residual: Boolean): DataFrame => DataFrame = {
-    val cents = collectPqCents(s, artifact)
-    val centOf = cents.toMap
     val (cb0, cb1) = collectPqBooks(s, artifact)
-    val Half = 32
+    adcQueryServer(s, collectPqCents(s, artifact), cb0, cb1, residual,
+      () => codesView(s, artifact), () => tombstonesOf(s, artifact),
+      excludeSelf, nprobe)
+  }
+
+  /** The in-memory face of [[adcQueryServer]]: a trained state's codes,
+    * no tombstones, self excluded; `k` is the per-query cut (refine
+    * takes a wider shortlist). */
+  private def ivfPqServer(t: IvfPqState, nprobe: Int = 1,
+                          k: Int = TopK): DataFrame => DataFrame = {
+    val s = t.sub.sparkSession
+    adcQueryServer(s, t.cents, t.cb0, t.cb1, t.residual, () => t.codes,
+      () => noTombstones(s), excludeSelf = true, nprobe, k)
+  }
+
+  /** The one IVF-PQ ADC server over trained centroids and books; the
+    * codes and tombstones are thunks resolved per batch. Raw LUTs are
+    * one per query, keyed q_id; residual LUTs are one per (query,
+    * probed list) — the query's residual against THAT list's centroid
+    * — keyed (q_id, cluster).
+    */
+  private def adcQueryServer(s: SparkSession, cents: Seq[(Int, Seq[Double])],
+      cb0: Seq[(Long, Seq[Double])], cb1: Seq[(Long, Seq[Double])],
+      residual: Boolean, codes: () => DataFrame,
+      tombstones: () => DataFrame, excludeSelf: Boolean, nprobe: Int,
+      k: Int = TopK): DataFrame => DataFrame = {
+    val centOf = cents.toMap
     (raw: DataFrame) => {
       val (qIdType, qs) = prepareQueries(raw, cents, nprobe)
       val q = localFrame(s, Seq("q_id" -> qIdType, "cluster" -> IntegerType),
@@ -3301,11 +3365,12 @@ object SimQueries {
               dName: String): DataFrame =
         localFrame(s, keys :+ (codeName -> LongType) :+ (dName -> DoubleType),
           for ((key, v) <- subjects;
-               (code, d) <- lutRow(v.slice(from, from + Half), cb))
+               (code, d) <- lutRow(v.slice(from, from + PqHalf), cb))
             yield Row.fromSeq(key :+ code :+ d))
-      ivfPqServeCore(s, artifact, q, lut(0, cb0, "code0", "d0"),
-        lut(Half, cb1, "code1", "d1"),
-        qs.flatMap(_.probes).distinct.sorted, excludeSelf, keys.map(_._1))
+      ivfPqServeCore(codes(), tombstones(), q,
+        lut(0, cb0, "code0", "d0"), lut(PqHalf, cb1, "code1", "d1"),
+        qs.flatMap(_.probes).distinct.sorted, excludeSelf, keys.map(_._1),
+        k)
     }
   }
 
@@ -3369,12 +3434,11 @@ object SimQueries {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toVector: Seq[Double]))
       .sortBy(_._1)
 
-  /** The shared deployed-ADC serving tail over a prepared batch: the
-    * codes scan partition-prunes to exactly the caller's `probed`
-    * labels (the S37 discipline; |Q|·nprobe of them), tombstones
-    * anti-join on candidates only, broadcast LUT joins, rank, top-k.
-    * Raw (S43) and residual (S45) encodings differ only in the LUT
-    * keys.
+  /** The one IVF-PQ serving tail over a prepared batch: the codes
+    * scan partition-prunes to exactly the caller's `probed` labels
+    * (the S37 discipline; |Q|·nprobe of them), tombstones anti-join on
+    * candidates only, broadcast LUT joins, rank, top-`k`. Raw (S43)
+    * and residual (S45) encodings differ only in the LUT keys.
     *
     * Every join side that is SMALL BY CONTRACT is broadcast-hinted
     * explicitly rather than left to the threshold: the query batch
@@ -3385,27 +3449,26 @@ object SimQueries {
     * PlanSpec pins the shape (no sort-merge join anywhere in the
     * serving plan, under ANY session threshold).
     */
-  private def ivfPqServeCore(s: SparkSession, artifact: String,
+  private def ivfPqServeCore(codes: DataFrame, tombstones: DataFrame,
                              q: DataFrame, lut0: DataFrame,
                              lut1: DataFrame, probed: Seq[Int],
                              excludeSelf: Boolean,
-                             lutKeys: Seq[String])
+                             lutKeys: Seq[String], k: Int)
   : DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("adc"), col("neighbor"))
-    val joined = codesView(s, artifact)
+    val joined = codes
       .filter(col("cluster").isin(probed: _*))
       .join(broadcast(q), Seq("cluster"))
     (if (excludeSelf) joined.filter(col("vec_id") =!= col("q_id"))
      else joined)
-      .join(broadcast(tombstonesOf(s, artifact)), Seq("vec_id"),
-        "left_anti")
+      .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
       .join(broadcast(lut0), lutKeys :+ "code0")
       .join(broadcast(lut1), lutKeys :+ "code1")
       .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
         round(col("d0") + col("d1"), 6).as("adc"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+      .filter(col("rank") <= k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -3473,59 +3536,9 @@ object SimQueries {
     * assignment pass + one micro-mean aggregate per subspace at
     * build time — offline, amortized over every serve.
     */
-  /** The S52 trainer over a (vec_id, label, s0, s1) subspace frame:
-    * label-mean seed → one Lloyd alternation → trained books. Shared
-    * by the build and the trainer-faithful S49 monitor (which must
-    * price EXACTLY what a Lloyd refresh would deliver).
-    */
-  private def lloydBooksFrom(sub: DataFrame)
-  : (Seq[(Long, Seq[Double])], Seq[(Long, Seq[Double])]) = {
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        sub.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    val cb0 = codebook("s0")
-    val cb1 = codebook("s1")
-    val seeded = graft.CachedFrames.persist(
-      sub.withColumn("a0", pqAssignment("s0", cb0))
-        .withColumn("a1", pqAssignment("s1", cb1))
-        .select(col("vec_id"), col("s0"), col("s1"),
-          col("a0.code").as("c0"), col("a1.code").as("c1")))
-    def trained(cCol: String, sCol: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        seeded.select(col(cCol).as("code"), col(sCol).as("v")), "code"))
-    (trained("c0", "s0"), trained("c1", "s1"))
-  }
-
   private[graft] def ivfPqLloydIndexWriteOn(e: DataFrame,
-                                            out: String): Unit = {
-    val s = e.sparkSession
-    import s.implicits._
-    val Half = 32
-    centroids(e).write.mode("overwrite").parquet(s"$out/centroids")
-    val cents = collectCents(e)
-    val sub = graft.CachedFrames.persist(
-      e.select(col("vec_id"), col("label"),
-        slice(col("vn"), 1, Half).as("s0"),
-        slice(col("vn"), Half + 1, Half).as("s1")))
-    // the Lloyd alternation, S19 verbatim at deployment grain
-    val (t0, t1) = lloydBooksFrom(sub)
-    (t0.map { case (c, v) => (0, c, v) } ++
-      t1.map { case (c, v) => (1, c, v) })
-      .toDF("sub", "code", "cv")
-      .write.mode("overwrite").parquet(s"$out/pq_codebooks")
-    val codes = sub.withColumn("b0", pqAssignment("s0", t0))
-      .withColumn("b1", pqAssignment("s1", t1))
-      .select(col("vec_id"),
-        col("b0.code").as("code0"), col("b1.code").as("code1"))
-    e.select(col("vec_id"), bestClusterCol(cents).as("cluster"))
-      .join(codes, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$out/codes")
-    writeEncodingMarker(s, out, "raw")
-    writeBooksMarker(s, out, "lloyd")
-    graft.streaming.SnapshotManifest.track(s, out, "codes")
-  }
+                                            out: String): Unit =
+    ivfPqWrite(ivfPqTrain(e, books = "lloyd"), out, "raw")
 
   private[graft] def pqLloydArtifactOf(s: SparkSession,
                                        dir: String): String =
@@ -3647,9 +3660,7 @@ object SimQueries {
   def knnIvfPqArtifactProbe(s: SparkSession, dir: String,
       nprobe: Int = NProbe): DataFrame =
     ivfPqQueryServer(s, pqArtifactOf(s, dir), excludeSelf = true,
-      nprobe = nprobe)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      nprobe = nprobe)(gateQueries(vecs(s, dir)))
 
   // lazy: knnIvfPqProbeSql is declared later in this object (the
   // object-init-order discipline)
@@ -3662,9 +3673,7 @@ object SimQueries {
   def knnIvfPqResArtifactProbe(s: SparkSession, dir: String,
       nprobe: Int = NProbe): DataFrame =
     ivfPqResQueryServer(s, pqResArtifactOf(s, dir), excludeSelf = true,
-      nprobe = nprobe)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      nprobe = nprobe)(gateQueries(vecs(s, dir)))
 
   lazy val knnIvfPqResArtifactProbeSql: String = knnIvfPqResidualProbeSql
 
@@ -3718,8 +3727,7 @@ object SimQueries {
         .filter(col("rank") <= TopK)
         .select(col("q_id"), col("neighbor")))
     val nTruth = NumQueries.toLong * TopK
-    val queries = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v")).localCheckpoint(false)
+    val queries = gateQueries(e).localCheckpoint(false)
     // round-14 (guide §2.6): independent rungs over shared persisted
     // frames — overlap from a driver pool; force shared frames first
     // (see ivfTune)
@@ -3869,38 +3877,29 @@ object SimQueries {
                              cb0d: Seq[(Long, Seq[Double])],
                              cb1d: Seq[(Long, Seq[Double])],
                              trainer: String = "label"): DataFrame = {
-    val sub = graft.CachedFrames.persist(
-      e.select(col("vec_id"), col("label"),
-        slice(col("vn"), 1, 32).as("s0"),
-        slice(col("vn"), 33, 32).as("s1")))
-    // the REBUILT books: the identical arithmetic the artifact's own
-    // trainer ships (`ivfPqIndexWriteOn` label means, or the S52
-    // Lloyd alternation), over the CURRENT corpus — the monitor
-    // prices exactly what a trainer-faithful refresh would deliver
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        sub.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    val (cb0r, cb1r) = trainer match {
-      case "label" => (codebook("s0"), codebook("s1"))
-      case "lloyd" => lloydBooksFrom(sub)
-      case other => throw new UnsupportedOperationException(
-        s"unknown PQ-book trainer '$other' — this monitor can price " +
-          "label or lloyd rebuilds only")
-    }
-    def objMicro(cb0: Seq[(Long, Seq[Double])],
-                 cb1: Seq[(Long, Seq[Double])]): (Long, Long) = {
-      val r = sub
-        .withColumn("a0", pqAssignment("s0", cb0))
-        .withColumn("a1", pqAssignment("s1", cb1))
-        .select(round(col("a0.d2") + col("a1.d2"), 6).as("err"))
-        .agg(expr("sum(cast(round(err * 1e6, 0) as bigint)) div count(1)"),
-          count(lit(1)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val (d, n) = objMicro(cb0d, cb1d)
-    val (rr, n2) = objMicro(cb0r, cb1r)
+    // the REBUILT books: the trainer a trainer-faithful refresh would
+    // run, over the CURRENT corpus; raw error ignores the centroids
+    val t = ivfPqTrain(e, books = trainer)
+    val (d, n) = pqErrMicro(t.sub, cb0d, cb1d)
+    val (rr, n2) = pqErrMicro(t.sub, t.cb0, t.cb1)
+    driftRow(s, d, rr, n, n2)
+  }
+
+  /** The mean per-vector reconstruction error of `sub` encoded under
+    * (cb0, cb1), 6dp per vector, micro-quantized before the mean so
+    * it is exact BIGINT arithmetic; with the row count. */
+  private def pqErrMicro(sub: DataFrame, cb0: Seq[(Long, Seq[Double])],
+                         cb1: Seq[(Long, Seq[Double])]): (Long, Long) = {
+    val r = pqEncoded(sub, cb0, cb1)
+      .select(round(col("a0.d2") + col("a1.d2"), 6).as("err"))
+      .agg(expr("sum(cast(round(err * 1e6, 0) as bigint)) div count(1)"),
+        count(lit(1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def driftRow(s: SparkSession, d: Long, rr: Long, n: Long,
+                       n2: Long): DataFrame = {
     require(n == n2)
     import s.implicits._
     Seq((d, rr, d - rr, n, rr < d))
@@ -4040,42 +4039,13 @@ object SimQueries {
     * own strong-mode corpus). */
   private[graft] def ivfPqResDriftFrom(s: SparkSession, artifact: String,
                                        e: DataFrame): DataFrame = {
-    import s.implicits._
-    val centsD = collectPqCents(s, artifact)
     val (cb0d, cb1d) = collectPqBooks(s, artifact)
-    def resSub(cents: Seq[(Int, Seq[Double])]): DataFrame = {
-      val centDf = cents.toDF("cluster", "cvec")
-      graft.CachedFrames.persist(
-        e.select(col("vec_id"), col("label"), col("vn"),
-          bestClusterCol(cents).as("cluster"))
-          .join(broadcast(centDf), Seq("cluster"))
-          .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-          .select(col("vec_id"), col("label"),
-            slice(col("r"), 1, 32).as("s0"),
-            slice(col("r"), 33, 32).as("s1")))
-    }
-    def errMicro(sub: DataFrame, cb0: Seq[(Long, Seq[Double])],
-                 cb1: Seq[(Long, Seq[Double])]): (Long, Long) = {
-      val r = sub
-        .withColumn("a0", pqAssignment("s0", cb0))
-        .withColumn("a1", pqAssignment("s1", cb1))
-        .select(round(col("a0.d2") + col("a1.d2"), 6).as("err"))
-        .agg(expr("sum(cast(round(err * 1e6, 0) as bigint)) div count(1)"),
-          count(lit(1)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val (d, n) = errMicro(resSub(centsD), cb0d, cb1d)
-    val subR = resSub(collectCents(e))
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        subR.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    val (rr, n2) = errMicro(subR, codebook("s0"), codebook("s1"))
-    require(n == n2)
-    Seq((d, rr, d - rr, n, rr < d))
-      .toDF("err_deployed_micro", "err_refreshed_micro", "gain_micro",
-        "n_vectors", "refresh")
+    val (d, n) = pqErrMicro(
+      pqSubspaces(e, collectPqCents(s, artifact), residual = true),
+      cb0d, cb1d)
+    val t = ivfPqTrain(e, residual = true)
+    val (rr, n2) = pqErrMicro(t.sub, t.cb0, t.cb1)
+    driftRow(s, d, rr, n, n2)
   }
 
   /** S49b gate: the residual twin of the S49 scenario — books AND
@@ -4226,44 +4196,18 @@ object SimQueries {
     */
   private[graft] def ivfPqInserter(s: SparkSession, artifact: String)
   : DataFrame => Unit = {
-    import s.implicits._
     val fs = graft.streaming.SnapshotManifest.fsOf(s, artifact)
     val enc = encodingOf(fs, artifact)
-    val cents = s.read.parquet(s"$artifact/centroids")
-      .select(col("label"), col("cvn")).collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toVector: Seq[Double]))
-      .sortBy(_._1)
+    val cents = collectPqCents(s, artifact)
     val (cb0, cb1) = collectPqBooks(s, artifact)
-    val Half = 32
-    def encodeRaw(vecsNorm: DataFrame): DataFrame = vecsNorm
-      .withColumn("s0", slice(col("vn"), 1, Half))
-      .withColumn("s1", slice(col("vn"), Half + 1, Half))
-      .withColumn("cluster", bestClusterCol(cents))
-      .withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"),
-        col("cluster"))
+    def append(vecs: DataFrame, residual: Boolean): Unit =
+      stagedClusterAppend(s, artifact, "codes",
+        pqEncoded(pqSubspaces(vecs, cents, residual), cb0, cb1)
+          .select(col("vec_id"), col("a0.code").as("code0"),
+            col("a1.code").as("code1"), col("cluster")))
     enc match {
-      case "raw" =>
-        (newVecs: DataFrame) =>
-          stagedClusterAppend(s, artifact, "codes", encodeRaw(newVecs))
-      case "residual" =>
-        val centDf = cents.toDF("cluster", "cvec")
-        (newVecs: DataFrame) => {
-          val assigned = newVecs
-            .withColumn("cluster", bestClusterCol(cents))
-            .join(broadcast(centDf), Seq("cluster"))
-            .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-            .withColumn("s0", slice(col("r"), 1, Half))
-            .withColumn("s1", slice(col("r"), Half + 1, Half))
-            .withColumn("a0", pqAssignment("s0", cb0))
-            .withColumn("a1", pqAssignment("s1", cb1))
-            .select(col("vec_id"),
-              col("a0.code").as("code0"), col("a1.code").as("code1"),
-              col("cluster"))
-          stagedClusterAppend(s, artifact, "codes", assigned)
-        }
+      case "raw" => (newVecs: DataFrame) => append(newVecs, false)
+      case "residual" => (newVecs: DataFrame) => append(newVecs, true)
       case "opq" =>
         val (chain, perm) = readRotation(s, artifact)
         (newVecs: DataFrame) => {
@@ -4284,7 +4228,7 @@ object SimQueries {
             .select(col("vec_id"), col("w").as("v"))
             .withColumn("vn", normalize(col("v")))
             .localCheckpoint(false)
-          stagedClusterAppend(s, artifact, "codes", encodeRaw(rotated))
+          append(rotated, false)
         }
       case other =>
         throw new UnsupportedOperationException(
@@ -4424,46 +4368,13 @@ object SimQueries {
     * frame — the seam a residual refresh/contract spec trains a
     * PARTIAL deployment through (mirrors [[ivfPqIndexWriteOn]]). */
   private[graft] def ivfPqResIndexWriteOn(e: DataFrame,
-                                          out: String): Unit = {
-    val s = e.sparkSession
-    import s.implicits._
-    centroids(e).write.mode("overwrite").parquet(s"$out/centroids")
-    val cents = collectCents(e)
-    val centDf = cents.toDF("cluster", "cvec")
-    val sub = graft.CachedFrames.persist(
-      e.select(col("vec_id"), col("label"), col("vn"),
-        bestClusterCol(cents).as("cluster"))
-        .join(broadcast(centDf), Seq("cluster"))
-        .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-        .select(col("vec_id"), col("label"), col("cluster"),
-          slice(col("r"), 1, 32).as("s0"),
-          slice(col("r"), 33, 32).as("s1")))
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        sub.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    val cb0 = codebook("s0")
-    val cb1 = codebook("s1")
-    (cb0.map { case (c, v) => (0, c, v) } ++
-      cb1.map { case (c, v) => (1, c, v) })
-      .toDF("sub", "code", "cv")
-      .write.mode("overwrite").parquet(s"$out/pq_codebooks")
-    sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"),
-        col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$out/codes")
-    writeEncodingMarker(s, out, "residual")
-    graft.streaming.SnapshotManifest.track(s, out, "codes")
-  }
+                                          out: String): Unit =
+    ivfPqWrite(ivfPqTrain(e, residual = true), out, "residual")
 
   private[graft] def ivfPqResServeArtifact(s: SparkSession, dir: String,
                                            artifact: String): DataFrame =
     ivfPqResQueryServer(s, artifact, excludeSelf = true)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      gateQueries(vecs(s, dir)))
 
   /** The residual-encoding twin of [[ivfPqQueryServer]]: the same
     * closure and per-batch driver prep, except that the LUTs are built
@@ -4485,7 +4396,7 @@ object SimQueries {
       artifact: String,
       excludeSelf: Boolean = false,
       nprobe: Int = 1): DataFrame => DataFrame =
-    adcQueryServer(s, artifact, excludeSelf, nprobe, residual = true)
+    artifactServer(s, artifact, excludeSelf, nprobe, residual = true)
 
   private[graft] def pqResArtifactOf(s: SparkSession,
                                      dir: String): String =
@@ -4696,50 +4607,14 @@ object SimQueries {
     */
   def knnIvfPqRefine(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val cents = collectCents(e)
-    val (sub, cb0, cb1) = pqCore(s, dir, vecCol = "vn")
-    knnIvfPqRefineOn(e, cents, sub, cb0, cb1)
+    ivfPqRefined(e, ivfPqTrain(e))
   }
 
-  private def knnIvfPqRefineOn(e: DataFrame,
-      cents: Seq[(Int, Seq[Double])], sub: DataFrame,
-      cb0: Seq[(Long, Seq[Double])],
-      cb1: Seq[(Long, Seq[Double])]): DataFrame = {
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    val db = e.select(col("vec_id"),
-        bestClusterCol(cents).as("cluster"))
-      .join(codes, Seq("vec_id"))
-    val q = db.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("cluster"))
-    val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
-    val lut1 = pqLut(sub, "s1", cb1, "code1", "d1")
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("neighbor"))
-    val shortlist = q.join(db, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut0), Seq("q_id", "code0"))
-      .join(broadcast(lut1), Seq("q_id", "code1"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
-        round(col("d0") + col("d1"), 6).as("adc"))
-      .withColumn("srank", row_number().over(wAdc))
-      .filter(col("srank") <= TopK * RefineFactor)
-      .drop("srank")
-    val qv = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("vn").as("qvn"))
-    val wExact = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor"))
-    e.select(col("vec_id").as("neighbor"), col("vn"))
-      .join(broadcast(shortlist), Seq("neighbor"))
-      .join(broadcast(qv), Seq("q_id"))
-      .select(col("q_id"), col("neighbor"), col("cluster"), col("adc"),
-        round(dot(col("qvn"), col("vn")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= TopK)
-      .orderBy(col("q_id"), col("rank"))
-  }
+  /** S17 over a trained state: the one ADC tail keeps a
+    * TopK×[[RefineFactor]] shortlist per query, rescored exactly. */
+  private def ivfPqRefined(e: DataFrame, t: IvfPqState): DataFrame =
+    exactRerank(e, ivfPqServer(t, k = TopK * RefineFactor)(gateQueries(e))
+      .drop("rank"))
 
   val knnIvfPqRefineSql: String = s"""
     WITH ${pqCoreSql("vn")},
@@ -4800,55 +4675,8 @@ object SimQueries {
     * arithmetic (zip_with subtraction of the broadcast centroid) is
     * exact in both engines; only codebook means are rounded.
     */
-  /** shared residual core: own-cluster residual subvector frame
-    * (vec_id, label, cluster, s0, s1), the two residual codebooks, the
-    * centroid literal, and its (cluster, cvec) frame — reused by S7 and
-    * its multi-probe variant.
-    */
-  private def resCore(s: SparkSession, dir: String)
-  : (DataFrame, Seq[(Long, Seq[Double])], Seq[(Long, Seq[Double])],
-      Seq[(Int, Seq[Double])], DataFrame) = {
-    import s.implicits._
-    val e = vecs(s, dir)
-    val cents = collectCents(e)
-    val centDf = cents.toDF("cluster", "cvec")
-    val sub = graft.CachedFrames.persist(
-      e.select(col("vec_id"), col("label"), col("vn"),
-        bestClusterCol(cents).as("cluster"))
-      .join(broadcast(centDf), Seq("cluster"))
-      .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-      .select(col("vec_id"), col("label"), col("cluster"),
-        slice(col("r"), 1, 32).as("s0"), slice(col("r"), 33, 32).as("s1")))
-      // reused by 2 codebook builds + codes + LUTs
-    def codebook(c: String): Seq[(Long, Seq[Double])] =
-      KMeans.collectCodebook(KMeans.meanByKey(
-        sub.select(col("label").cast("long").as("code"), col(c).as("v")),
-        "code"))
-    (sub, codebook("s0"), codebook("s1"), cents, centDf)
-  }
-
-  def knnIvfPqResidual(s: SparkSession, dir: String): DataFrame = {
-    val (sub, cb0, cb1, _, _) = resCore(s, dir)
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"), col("cluster"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    val q = sub.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("cluster"))
-    val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
-    val lut1 = pqLut(sub, "s1", cb1, "code1", "d1")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("neighbor"))
-    q.join(codes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut0), Seq("q_id", "code0"))
-      .join(broadcast(lut1), Seq("q_id", "code1"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
-        round(col("d0") + col("d1"), 6).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .orderBy(col("q_id"), col("rank"))
-  }
+  def knnIvfPqResidual(s: SparkSession, dir: String): DataFrame =
+    ivfPqTwin(vecs(s, dir), residual = true)
 
   /** S7b: multi-probe RESIDUAL IVF-PQ — the one serving path where
     * nprobe changes more than the coarse-prune join: residual LUTs are
@@ -4861,50 +4689,8 @@ object SimQueries {
     * LUT-cost reason; this is the accuracy-first configuration.
     */
   def knnIvfPqResidualProbe(s: SparkSession, dir: String,
-      nprobe: Int = NProbe): DataFrame = {
-    val (sub, cb0, cb1, cents, centDf) = resCore(s, dir)
-    val e = vecs(s, dir)
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"), col("cluster"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    // the query's top-p lists, each with the residual vs THAT list's
-    // centroid — same slice+explode probe selection as S8, then one
-    // broadcast-joined centroid subtraction (narrow map)
-    val qp = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("vn"),
-        explode(topProbesCol(cents, nprobe)).as("p"))
-      .select(col("q_id"), col("vn"), col("p.label").as("cluster"))
-      .join(broadcast(centDf), Seq("cluster"))
-      .withColumn("r", expr("zip_with(vn, cvec, (a, b) -> a - b)"))
-      .select(col("q_id"), col("cluster"),
-        slice(col("r"), 1, 32).as("s0"), slice(col("r"), 33, 32).as("s1"))
-    def lutP(sCol: String, cb: Seq[(Long, Seq[Double])],
-        codeName: String, dName: String): DataFrame =
-      qp.select(col("q_id"), col("cluster"), explode(array(cb.map {
-        case (code, cv) => struct(
-          lit(code).as(codeName),
-          round(dot(col(sCol), col(sCol)) -
-            lit(2.0) * dot(col(sCol), typedLit(cv)) +
-            lit(dotSeq(cv, cv)), 6).as(dName))
-      }: _*)).as("x"))
-        .select(col("q_id"), col("cluster"),
-          col(s"x.$codeName").as(codeName), col(s"x.$dName").as(dName))
-    val lut0 = lutP("s0", cb0, "code0", "d0")
-    val lut1 = lutP("s1", cb1, "code1", "d1")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("neighbor"))
-    qp.select(col("q_id"), col("cluster"))
-      .join(codes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut0), Seq("q_id", "cluster", "code0"))
-      .join(broadcast(lut1), Seq("q_id", "cluster", "code1"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
-        round(col("d0") + col("d1"), 6).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .orderBy(col("q_id"), col("rank"))
-  }
+      nprobe: Int = NProbe): DataFrame =
+    ivfPqTwin(vecs(s, dir), residual = true, nprobe = nprobe)
 
   val knnIvfPqResidualSql: String = s"""
     WITH e AS ($vecsSql),
@@ -5082,37 +4868,8 @@ object SimQueries {
     * serving cost reasons.)
     */
   def knnIvfPqProbe(s: SparkSession, dir: String,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = vecs(s, dir)
-    val cents = collectCents(e)
-    val (sub, cb0, cb1) = pqCore(s, dir, vecCol = "vn")
-    val codes = sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
-      .select(col("vec_id"),
-        col("a0.code").as("code0"), col("a1.code").as("code1"))
-    val db = e.select(col("vec_id"),
-        bestClusterCol(cents).as("cluster"))
-      .join(codes, Seq("vec_id"))
-    // top-p probe lists per query: same slice+explode as knn_ivf_probe
-    // — a narrow map, no new shuffle
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        explode(topProbesCol(cents, nprobe)).as("p"))
-      .select(col("q_id"), col("p.label").as("cluster"))
-    val lut0 = pqLut(sub, "s0", cb0, "code0", "d0")
-    val lut1 = pqLut(sub, "s1", cb1, "code1", "d1")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("neighbor"))
-    q.join(db, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut0), Seq("q_id", "code0"))
-      .join(broadcast(lut1), Seq("q_id", "code1"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("cluster"),
-        round(col("d0") + col("d1"), 6).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .orderBy(col("q_id"), col("rank"))
-  }
+      nprobe: Int = NProbe): DataFrame =
+    ivfPqTwin(vecs(s, dir), nprobe = nprobe)
 
   val knnIvfPqProbeSql: String = s"""
     WITH ${pqCoreSql("vn")},
@@ -5296,8 +5053,7 @@ object SimQueries {
         "code"))
     val cb0 = codebook("s0")
     val cb1 = codebook("s1")
-    sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
+    pqEncoded(sub, cb0, cb1)
       .select(col("vec_id"),
         col("a0.code").as("code0"), col("a1.code").as("code1"),
         round(col("a0.d2") + col("a1.d2"), 6).as("err"))
@@ -5344,8 +5100,7 @@ object SimQueries {
         slice(col("w"), 1, 32).as("s0"), slice(col("w"), 33, 32).as("s1")))
     val cb0 = lloydCodebook(sub, "s0", iters)
     val cb1 = lloydCodebook(sub, "s1", iters)
-    sub.withColumn("a0", pqAssignment("s0", cb0))
-      .withColumn("a1", pqAssignment("s1", cb1))
+    pqEncoded(sub, cb0, cb1)
       .select(col("vec_id"),
         col("a0.code").as("code0"), col("a1.code").as("code1"),
         round(col("a0.d2") + col("a1.d2"), 6).as("err"))
@@ -6107,15 +5862,14 @@ object SimQueries {
     * queries from the PERSISTED parameters → serve ≡ train → serve).
     */
   def knnOpq(s: SparkSession, dir: String): DataFrame =
-    knnIvfPqOn(opqChosenOf(s, dir)._1)
+    ivfPqTwin(opqChosenOf(s, dir)._1)
 
   /** S50 gate: serve the standard query set from the deployed
     * rotated artifact — queries rotated by the rotation TABLE, never
     * by recomputation. */
   def knnOpqArtifact(s: SparkSession, dir: String): DataFrame =
     opqQueryServer(s, opqArtifactOf(s, dir), excludeSelf = true)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      gateQueries(vecs(s, dir)))
 
   /** S50 oracle: the S20 ladder chooses the depth (the
     * `opqRotateCoupledSql` machinery verbatim), the chosen rotated
@@ -6221,8 +5975,7 @@ object SimQueries {
         .select(col("vec_id"), col("v")))
     }
     opqQueryServer(s, artifact, excludeSelf = true)(
-      vecs(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("v")))
+      gateQueries(vecs(s, dir)))
   }
 
   /** S51 opq oracle: knnOpqSql with a train/apply split — reflection
@@ -7313,17 +7066,17 @@ object SimQueries {
     // unchanged — so the oracle hash is unchanged. The standalone
     // gates (knn_ivf, knn_pq_adc, …) still price their own builds.
     val e = graft.CachedFrames.persist(vecs(s, dir))
-    val cents = collectCents(e)
+    val ivfPq = ivfPqTrain(e)
     val (sub, cb0, cb1) = pqCoreOn(e, vecCol = "vn")
     val brute = knnBruteOn(e).select(col("q_id"), col("neighbor"))
       .withColumn("istrue", lit(1L))
     val built = Seq(
-      ("ivf", knnIvfOn(e, cents)),
+      ("ivf", knnIvfOn(e, ivfPq.cents)),
       ("lsh", knnLshOn(e)),
       ("pq_adc", knnPqAdcOn(sub, cb0, cb1)),
-      ("ivfpq", knnIvfPqParts(e, cents, sub, cb0, cb1)),
+      ("ivfpq", ivfPqServer(ivfPq)(gateQueries(e))),
       ("pq_refine", knnPqRefineOn(e, sub, cb0, cb1)),
-      ("ivfpq_refine", knnIvfPqRefineOn(e, cents, sub, cb0, cb1)))
+      ("ivfpq_refine", ivfPqRefined(e, ivfPq)))
     val union = built.map { case (m, df) =>
       df.select(lit(m).as("method"), col("q_id"), col("neighbor"))
     }.reduce(_ unionByName _)

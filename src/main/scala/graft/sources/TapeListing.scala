@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** One tape data file: its path, `dt` day, size, mtime (epoch ms) and
   * the `{firstSeq}-{lastSeq}` range its name declares (-1 for a name
-  * without one).
+  * without one). A writer that finds its range's name taken appends
+  * its task id, `{firstSeq}-{lastSeq}-{taskId}`; the range is the same.
   */
 final case class TapeFileSlice(file: String, dt: String, size: Long,
                                mtime: Long, seqFirst: Long, seqLast: Long)
@@ -21,8 +22,10 @@ final case class TapeFileSlice(file: String, dt: String, size: Long,
 object TapeListing {
 
   private val DayPrefix = s"${Tape.DtCol}="
-  /** at most 18 digits a side, so every match fits a Long */
-  private val SeqRangeRe = "(\\d{1,18})-(\\d{1,18})(?:\\.txt)?".r
+  /** at most 18 digits a side, so every match fits a Long; an
+    * optional writer task-id suffix */
+  private val SeqRangeRe =
+    "(\\d{1,18})-(\\d{1,18})(?:-\\d{1,19})?(?:\\.txt)?".r
 
   private def isDataFile(st: FileStatus): Boolean = {
     val name = st.getPath.getName

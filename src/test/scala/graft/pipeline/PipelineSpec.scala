@@ -598,6 +598,9 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     // half the 68 jobs of a deploy that packed the corpus twice and
     // trained its tokenizer with several Spark jobs per merge
     assert(jobs.size <= 34, s"${jobs.size} jobs: $jobs")
+    // the corpus is read once: one schema inference of `documents`
+    val inferred = jobs.filter(_._1.exists(_.startsWith("parquet at Tables")))
+    assert(inferred.size <= 1, s"documents read ${inferred.size} times: $jobs")
     val gate = PipelineQueries.dataShardManifest(spark, dir).collect()
       .map(_.toSeq).toSeq
     graft.CachedFrames.releaseAll()

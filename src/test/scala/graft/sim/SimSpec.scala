@@ -2008,6 +2008,23 @@ class SimSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("cold in-memory IVF-PQ gates served through the deployed closure " +
+    "run no more Spark jobs than their standalone pipelines did") {
+    // the standalone pipelines ran 21 (knn_ivfpq) and 22
+    // (knn_ivfpq_res_probe) jobs cold on this corpus
+    val gates = Seq(
+      ("knn_ivfpq", 21, () => SimQueries.knnIvfPq(spark, dir)),
+      ("knn_ivfpq_res_probe", 22,
+        () => SimQueries.knnIvfPqResidualProbe(spark, dir)))
+    for ((gate, bound, run) <- gates) {
+      graft.CachedFrames.releaseAll()
+      val (rows, jobs) = SharedSpark.jobsOf(run().collect())
+      assert(rows.length === SimQueries.NumQueries * SimQueries.TopK)
+      assert(jobs.size <= bound, s"$gate: ${jobs.size} jobs: $jobs")
+    }
+    graft.CachedFrames.releaseAll()
+  }
+
   test("OPQ: the trained permutation is orthogonal (a bijection of " +
     "dims) and beats the naive split on planted anisotropy") {
     import org.apache.spark.sql.functions._

@@ -219,6 +219,35 @@ class TapeCompactorSpec extends AnyFunSuite with SharedSpark {
     assert(!rebuilt.exists(_.getString(1) == "999-1.txt"))
   }
 
+  test("a seq range written twice: the writer's task-suffixed file is " +
+    "ok for fsck, indexed by the manifest and read by a range seek") {
+    val root = Files.createTempDirectory("graft-collide").toString
+    import spark.implicits._
+    val records = (1 to 60).map { i =>
+      (s"p-$i".getBytes(UTF_8), i.toLong,
+        java.sql.Timestamp.valueOf("2024-05-01 09:00:00"))
+    }.toDF(Tape.DataCol, Tape.SeqCol, Tape.TsCol)
+    TapeWriter.write(records, root, "s", numFiles = 1)
+    TapeWriter.write(records, root, "s", numFiles = 1,
+      mode = org.apache.spark.sql.SaveMode.Append)
+    val names = new java.io.File(s"$root/s/dt=2024-05-01").listFiles()
+      .map(_.getName).filter(_.endsWith(".txt")).sorted.toSeq
+    assert(names.length === 2 && names.contains("1-60.txt") &&
+      names.exists(_.matches("1-60-\\d+\\.txt")), names)
+    val report = TapeFsck.fsck(spark, root, "s").collect()
+    assert(report.map(_.getString(1)).sorted.toSeq === names)
+    assert(report.forall(_.getString(2) == "ok"), report.mkString("\n"))
+    TapeManifest.write(spark, root, "s")
+    val man = TapeManifest.load(spark, root, "s").collect()
+    assert(man.map(_.getString(1)).sorted.toSeq === names)
+    assert(man.forall(r => r.getLong(2) == 1L && r.getLong(3) == 60L))
+    val payloads = TapeManifest.readSeqRange(spark, root, "s", 10L, 20L)
+      .selectExpr(s"decode(${Tape.PayloadCol}, 'UTF-8') AS p")
+      .collect().map(_.getString(0))
+    assert(payloads.sorted.toSeq ===
+      (1 to 60).flatMap(i => Seq(s"p-$i", s"p-$i")).sorted)
+  }
+
   test("manifest refresh is incremental: no-op on an unchanged tape, " +
     "appended days add rows, expired days drop rows") {
     val root = Files.createTempDirectory("graft-refresh").toString

@@ -10,7 +10,11 @@ temporary directory, removed again at exit. For each seed the two sides
 run back to back, and the side that runs first alternates from pair to
 pair, so a slow drift of the host does not favour either side. Both
 sides run `python3 perfbench/run.py --workload W --seed S --seconds N
---trace T` of their own checkout.
+--trace T` of their own checkout. With `--trace 1`, each run's span
+file is moved to `traces/<workload>-seed<S>-<parent|change>.jsonl` in
+this checkout's build dir (`$CARGO_TARGET_DIR`, default `.bench_build`),
+so both sides' spans outlive the parent worktree and a shared
+`$CARGO_TARGET_DIR` does not let one side overwrite the other.
 
 Prints, for every metric the runs report: the per-pair values, each
 side's median and interquartile range (IQR, q3 - q1), the median ratio
@@ -48,6 +52,22 @@ def better_of():
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     return {m["name"]: m["better"]
             for key in ("end_to_end", "per_layer") for m in spec.get(key, [])}
+
+
+def build_dir(checkout):
+    """perfbench's build dir for `checkout` (perfbench/build.py's rule)."""
+    return Path(os.environ.get("CARGO_TARGET_DIR",
+                               str(checkout / ".bench_build"))).resolve()
+
+
+def keep_trace(checkout, a, seed, side):
+    """Moves the span file a traced run just wrote to a per-side name."""
+    name = f"{a.workload}-seed{seed}"
+    src = build_dir(checkout) / "traces" / f"{name}.jsonl"
+    if a.trace and src.exists():
+        dst = build_dir(ROOT) / "traces" / f"{name}-{side}.jsonl"
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        shutil.move(str(src), str(dst))
 
 
 def run_side(checkout, a, seed):
@@ -135,6 +155,7 @@ def main():
             pair = {"seed": seed, "first": order[0]}
             for side in order:
                 res, err = run_side(sides[side], a, seed)
+                keep_trace(sides[side], a, seed, side)
                 pair[side] = res
                 status = (f"failed ops {res['failed']}/{res['attempted']}"
                           if res else f"RUN FAILED ({err})")
